@@ -95,9 +95,8 @@ def main() -> None:
     # so first-scan IO lands in cold_total, not on whichever query now runs
     # first — the r4 rotation put heavy queries at the head of the order.
     # Through load_table, NOT a raw read: events.parquet carries
-    # TIMESTAMP(NANOS), and on builds where that only scans under the
-    # legacy nanosAsLong conf a raw read here would crash the whole bench
-    # before any loader had set it (the same env drift plan_audit guards).
+    # TIMESTAMP(NANOS), which surfaces as LONG, TIMESTAMP_NTZ or TIMESTAMP
+    # depending on the build, and only the loaders normalize it.
     from stateful_spark_streaming_spark.sources.tables import load_table
 
     for t in (
@@ -141,20 +140,6 @@ def main() -> None:
         # them; actions are thread-safe and job descriptions are
         # thread-local.  Timed loops below are UNCHANGED — still
         # sequential, solo, median-of-N.
-        #
-        # Several streaming runners set-then-restore session confs
-        # (shuffle partitions for state sizing, the state-store
-        # provider); interleaved restores can persist a neighbor's
-        # temporary value, so the volatile confs are snapshotted here
-        # and pinned back after the pool drains — warmup plans may see a
-        # neighbor's transient value (harmless: results are discarded),
-        # the timed loops never do.
-        _VOLATILE_CONFS = (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.streaming.stateStore.providerClass",
-            "spark.sql.streaming.stopTimeout",
-        )
-        _saved_confs = {k: spark.conf.get(k, None) for k in _VOLATILE_CONFS}
 
         def _warm_one(item):
             name, fn = item
@@ -178,11 +163,6 @@ def main() -> None:
         else:
             for item in qs.items():
                 _warm_one(item)
-        for k, v in _saved_confs.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         spark.sparkContext.setJobDescription(None)
         # one sweep instead of per-query: sf0.001 caches are tiny, and a
         # mid-pool global clearCache would evict a CONCURRENT query's

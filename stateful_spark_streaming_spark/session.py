@@ -52,6 +52,10 @@ def get_spark(
         # 100 TB — reasonable granularity for 1000 executors.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
+        # events.ts is TIMESTAMP(NANOS): surface it as LONG nanos where the
+        # build still honors this; every events reader normalizes LONG,
+        # TIMESTAMP_NTZ and TIMESTAMP alike (sources.tables)
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -47,10 +47,6 @@ def load_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     translate to a source filter.  Filter FIRST on this frame, then
     convert with ``events_ts_to_instant`` — plan-audited by track_range
     (PushedFilters must include the ts range)."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # noqa: BLE001
-        pass
     df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     return df.select("event_id", "ts", "user_id", "event_type", "value", "props")
 
@@ -92,10 +88,6 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
       unlike a plain NTZ→TIMESTAMP cast, so the driver's session (whatever
       its tz) and our UTC factory agree with the DuckDB oracle's
       epoch_ms."""
-    try:  # honored on builds that still support it; harmless elsewhere
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # noqa: BLE001
-        pass
     df = spark.read.parquet(path)
     df = events_ts_to_instant(df)
     return df.select("event_id", "ts", "user_id", "event_type", "value", "props")

@@ -36,7 +36,6 @@ import json
 import os
 import tempfile
 import threading
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -681,6 +680,105 @@ def multi_state_pipeline(
     return handles
 
 
+_SHUFFLE_CONF = "spark.sql.shuffle.partitions"
+_NO_DATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
+_STATE_STORE_CONF = "spark.sql.streaming.stateStore.providerClass"
+#: ``state_store=`` aliases; None keeps the session's provider and an
+#: unknown alias raises KeyError before anything starts
+_STATE_STORE_PROVIDERS = {
+    None: None,
+    "hdfs": "org.apache.spark.sql.execution.streaming.state."
+    "HDFSBackedStateStoreProvider",
+    "rocksdb": "org.apache.spark.sql.execution.streaming.state."
+    "RocksDBStateStoreProvider",
+}
+
+
+def replay(
+    spark: SparkSession,
+    build,
+    checkpoint_dir: str,
+    *,
+    confs: dict | None = None,
+    emits_on_no_data: bool = True,
+    timeout_s: int = 300,
+) -> None:
+    """Run one bounded ``availableNow`` replay to completion — the one
+    harness behind every ``run_*`` runner.  ``build(session)`` returns
+    the query's ``DataStreamWriter`` (graph, output mode, sink) built
+    from ``session.readStream``; this adds the checkpoint and the
+    trigger, starts the query and waits for it.
+
+    The query runs in a private CLONE of ``spark`` (its runtime conf and
+    temp views, none of its later changes).  ``confs`` (``None`` values
+    skipped), the no-data pin and a bounded ``stopTimeout`` are set on
+    the clone only: Spark captures conf at ``start()``, so the pins size
+    the query's state and every in-batch job (``foreachBatch`` code reads
+    through ``bdf.sparkSession``), while the caller's session is never
+    mutated and concurrent replays on one session cannot see each
+    other's pins.  The caller's streaming listeners are forwarded to the
+    clone for the run and detached once the listener bus has delivered
+    its last event, so they see every started/progress/terminated event
+    of the replay before this returns.
+
+    ``emits_on_no_data=False`` declares that the OUTPUT cannot depend on
+    the trailing no-data micro-batch a watermarked query runs after its
+    last data batch purely to evict state (~40 % of a bounded
+    stream-stream replay, thrown away with the checkpoint).  True for
+    ``dropDuplicatesWithinWatermark`` into an append sink and INNER
+    stream-stream joins — both emit every row in a data batch.  NEVER for
+    outer joins (null-matched rows are emitted BY that batch), append
+    aggregations/session windows (finalization emits there) or folds with
+    timeouts (timers fire there).
+
+    A replay still running after ``timeout_s`` HUNG: serving its
+    half-applied output as complete is the silent-partial-result class,
+    so the query is stopped — bounded by the 10 s ``stopTimeout``, or a
+    batch ignoring interruption would turn the stop into a second silent
+    hang — and ``TimeoutError`` raised.  The checkpoint resumes the
+    replay on the next run."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    pins = {**(confs or {}), "spark.sql.streaming.stopTimeout": 10_000}
+    if not emits_on_no_data:
+        pins[_NO_DATA_CONF] = "false"
+    for k, v in pins.items():
+        if v is not None:
+            clone.conf.set(k, str(v))
+    listeners = list(spark._jsparkSession.streams().listListeners())
+    jstreams = clone._jsparkSession.streams()
+    for listener in listeners:
+        jstreams.addListener(listener)
+    try:
+        q = (
+            build(clone)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(timeout_s):
+            _swallow(q.stop)  # a stop timeout must not mask the raise
+            raise TimeoutError(
+                f"streaming replay did not terminate within timeout_s={timeout_s}s"
+                " — refusing to serve a partially-applied result (the "
+                f"checkpoint {checkpoint_dir} resumes it on the next run)"
+            )
+    finally:
+        if listeners:
+            bus = spark.sparkContext._jsc.sc().listenerBus()
+            _swallow(lambda: bus.waitUntilEmpty(10_000))
+            for listener in listeners:
+                jstreams.removeListener(listener)
+
+
+def _swallow(fn) -> None:
+    """Run ``fn`` ignoring exceptions — only for best-effort cleanup on a
+    path that is already raising the real error."""
+    try:
+        fn()
+    except Exception:  # noqa: BLE001 — cleanup must not mask the raise
+        pass
+
+
 def run_snapshot_query(
     spark: SparkSession,
     events_path: str,
@@ -700,120 +798,24 @@ def run_snapshot_query(
     trigger, so size it to key volume: a handful of partitions for
     thousands of keys (measured 3× faster than 32 partitions for 1.5k
     keys), the session default for production key counts."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     cfg = cfg or TrackStateConfig()
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_")
+    sink = ParquetSnapshotSink(
+        spark, "StreamingTracks", cfg.key, path=f"{checkpoint_dir}_snapshot"
+    )
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        return _run_snapshot_query(spark, events_path, cfg, checkpoint_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-
-def _await_or_die(q, seconds: int = 300) -> None:
-    """Await an availableNow replay, LOUDLY.  These replays finish in
-    seconds; ``awaitTermination`` returning False means the stream HUNG —
-    proceeding would serve a half-applied standing table as if the run
-    completed (the silent-partial-result class).  Stop the query and
-    raise instead; the checkpoint makes the next run resume exactly where
-    the hung one stopped.
-
-    The stop is synchronous but BOUNDED: Spark's default
-    ``spark.sql.streaming.stopTimeout`` (0) waits INDEFINITELY for the
-    micro-batch thread, so a batch that ignores interruption would turn
-    ``q.stop()`` into a second silent hang inside the very helper that
-    exists to raise loudly (ADVICE r10).  A temporary 10 s stopTimeout
-    bounds the wait while still SIGNALING the stop and normally joining
-    the thread — a fire-and-forget stop would abandon a live query that
-    keeps committing generation swaps to its standing table behind the
-    caller's back, which is the same half-applied hazard this helper
-    exists to prevent.  Either way the TimeoutError is raised."""
-    if not q.awaitTermination(seconds):
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            # no session to bound stopTimeout on (stop() would then wait
-            # indefinitely, default 0) — fall back to a fire-and-forget
-            # daemon stop so the loud raise below cannot be swallowed by
-            # a second hang; every in-repo runner calls this helper on
-            # the session thread, so this branch is defensive only
-            import threading
-
-            threading.Thread(
-                target=lambda: _swallow(q.stop), daemon=True,
-                name="await-or-die-stop",
-            ).start()
-        else:
-            _KEY = "spark.sql.streaming.stopTimeout"
-            old = spark.conf.get(_KEY, None)
-            try:
-                spark.conf.set(_KEY, "10000")
-                _swallow(q.stop)  # a stop timeout must not mask the raise
-            finally:
-                if old is None:
-                    spark.conf.unset(_KEY)
-                else:
-                    spark.conf.set(_KEY, old)
-        raise TimeoutError(
-            f"streaming query did not terminate within {seconds}s — "
-            "refusing to serve a partially-applied result (the "
-            "checkpoint resumes the replay on the next run)"
+    def build(s: SparkSession):
+        keyed = stream_events_source(s, events_path).withColumn(
+            "arrival", F.col(cfg.arrival)
         )
+        return track_state_stream(keyed, cfg).writeStream.outputMode(
+            "update"
+        ).foreachBatch(sink)
 
-
-def _swallow(fn) -> None:
-    """Run ``fn`` ignoring exceptions — only for best-effort cleanup on a
-    path that is already raising the real error."""
-    try:
-        fn()
-    except Exception:  # noqa: BLE001 — cleanup must not mask the raise
-        pass
-
-
-_NO_DATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
-
-
-@contextmanager
-def _without_no_data_batches(spark: SparkSession):
-    """Skip the trailing NO-DATA micro-batch for a replay whose OUTPUT
-    provably does not depend on it.
-
-    When a query carries a watermark, advancing it after the last data
-    batch makes the engine run one more (empty) trigger purely to evict
-    expired state — a full batch cycle (planning + state commit across
-    every partition + offset/commit log writes) that measured ~40 % of a
-    bounded stream-stream replay.  For an availableNow replay the engine
-    stops right after, so the eviction work is thrown away with the
-    checkpoint.
-
-    ONLY valid where the no-data batch cannot EMIT anything:
-    - ``dropDuplicatesWithinWatermark`` + append sink — retained rows are
-      emitted in the data batch that first carries them; eviction emits
-      nothing.
-    - INNER stream-stream joins — a pair is emitted in the data batch
-      where its second side arrives; eviction emits nothing.
-
-    NEVER for: outer joins (null-matched rows are emitted BY the no-data
-    batch), append-mode aggregations/session windows (window finalization
-    emits there), or stateful folds with processing-time timeouts (timers
-    fire there).  Callers opt in per stream; the conf is snapshotted and
-    pinned back so neighbors never inherit it."""
-    old = spark.conf.get(_NO_DATA_CONF, None)
-    spark.conf.set(_NO_DATA_CONF, "false")
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(_NO_DATA_CONF)
-        else:
-            spark.conf.set(_NO_DATA_CONF, old)
+    replay(spark, build, checkpoint_dir, confs={_SHUFFLE_CONF: state_partitions})
+    return sink.query()
 
 
 def _stage_parquet_stream(
@@ -847,28 +849,27 @@ def _stage_parquet_stream(
     return reader.load(src_dir)
 
 
+def _parquet_batches(path: str, max_files_per_trigger: int | None, sink):
+    """``replay`` build for the common shape: a parquet path streamed
+    straight into a ``foreachBatch`` sink."""
+    return lambda s: _stage_parquet_stream(
+        s, path, max_files_per_trigger
+    ).writeStream.foreachBatch(sink)
+
+
 def stream_events_source(
     spark: SparkSession,
     events_path: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming source over an events parquet file/dir: explicit schema,
-    nanos-as-long handling, single-file symlink into a source directory.
+    nanos timestamp handling, single-file symlink into a source directory.
     ``max_files_per_trigger`` splits a multi-file replay into micro-batches
     (availableNow honors it)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    # file source needs an explicit schema AND a directory; symlink the
-    # single parquet file into a temp dir, and read the footer schema with
-    # the nanos-as-long conf active, then rebuild a timestamp in-stream.
     # Like _load_events, normalize every way the nanos column can surface
     # (bigint / timestamp_ntz / timestamp) to a real UTC instant.
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # noqa: BLE001
-        pass
     stream_df = _stage_parquet_stream(spark, events_path, max_files_per_trigger)
     ts_type = dict(stream_df.dtypes).get("ts")
     if ts_type == "bigint":
@@ -882,31 +883,6 @@ def stream_events_source(
             ),
         )
     return stream_df
-
-
-def _run_snapshot_query(
-    spark: SparkSession,
-    events_path: str,
-    cfg: TrackStateConfig,
-    checkpoint_dir: str,
-) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    stream_df = stream_events_source(spark, events_path)
-    keyed = stream_df.withColumn("arrival", F.col(cfg.arrival))
-    snap = track_state_stream(keyed, cfg)
-    sink = ParquetSnapshotSink(
-        spark, "StreamingTracks", cfg.key, path=f"{checkpoint_dir}_snapshot"
-    )
-    q = (
-        snap.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
-    return sink.query()
 
 
 def run_streaming_sliding_counts(
@@ -924,32 +900,22 @@ def run_streaming_sliding_counts(
     snapshot sink keyed by window start (width is fixed, so start
     determines end).  Against an unbounded source a ``withWatermark``
     upstream bounds window state exactly as in the tumbling twin."""
-    import tempfile
-
     from stateful_spark_streaming_spark.operators.windows import sliding_counts
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_slide_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream_df = stream_events_source(spark, events_path)
-        windowed = sliding_counts(stream_df, width=width, slide=slide)
-        sink = ParquetSnapshotSink(
-            spark, "StreamingSliding", "window_start_ms",
-            path=f"{checkpoint_dir}_snapshot",
-        )
-        q = (
-            windowed.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_die(q)
-        return sink.query()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    sink = ParquetSnapshotSink(
+        spark, "StreamingSliding", "window_start_ms",
+        path=f"{checkpoint_dir}_snapshot",
+    )
+    replay(
+        spark,
+        lambda s: sliding_counts(stream_events_source(s, events_path), width=width, slide=slide)
+        .writeStream.outputMode("update")
+        .foreachBatch(sink),
+        checkpoint_dir,
+        confs={_SHUFFLE_CONF: state_partitions},
+    )
+    return sink.query()
 
 
 def run_streaming_dedup(
@@ -979,38 +945,26 @@ def run_streaming_dedup(
     micro-batches (availableNow honors it), exercising cross-batch
     suppression through the state store rather than within one batch.
     """
-    import tempfile
-
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_dedup_")
     out_dir = checkpoint_dir + "_out"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream_df = stream_events_source(
-            spark, events_path, max_files_per_trigger=max_files_per_trigger
-        )
-        deduped = (
-            stream_df.withWatermark("ts", delay)
+
+    def build(s: SparkSession):
+        return (
+            stream_events_source(s, events_path, max_files_per_trigger)
+            .withWatermark("ts", delay)
             .dropDuplicatesWithinWatermark(list(keys))
             .select(*keys)
+            .writeStream.format("parquet")
+            .option("path", out_dir)
         )
-        # append-mode dedup emits each retained row in the data batch that
-        # first carries it; the trailing no-data batch only evicts expired
-        # key state (output-identical without it — see the helper)
-        with _without_no_data_batches(spark):
-            q = (
-                deduped.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_or_die(q)
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+
+    # append-mode dedup emits each retained row in the data batch that
+    # first carries it; the trailing no-data batch only evicts key state
+    replay(
+        spark, build, checkpoint_dir,
+        confs={_SHUFFLE_CONF: state_partitions}, emits_on_no_data=False,
+    )
+    return spark.read.parquet(out_dir)
 
 
 class CompleteSnapshotSink(ParquetSnapshotSink):
@@ -1055,33 +1009,23 @@ def run_streaming_session_windows(
     a latest-batch snapshot sink, which makes multi-batch ≡ single-pass ≡
     batch exactly; on an unbounded source use append + ``withWatermark``
     upstream, trading completeness of open sessions for bounded state."""
-    import tempfile
-
     from stateful_spark_streaming_spark.operators.windows import session_windows
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_sess_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream_df = stream_events_source(
-            spark, events_path, max_files_per_trigger=max_files_per_trigger
+    sink = CompleteSnapshotSink(
+        spark, "StreamingSessions", key, path=f"{checkpoint_dir}_snapshot"
+    )
+    replay(
+        spark,
+        lambda s: session_windows(
+            stream_events_source(s, events_path, max_files_per_trigger), key=key, gap=gap
         )
-        sessions = session_windows(stream_df, key=key, gap=gap)
-        sink = CompleteSnapshotSink(
-            spark, "StreamingSessions", key, path=f"{checkpoint_dir}_snapshot"
-        )
-        q = (
-            sessions.writeStream.outputMode("complete")
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_die(q)
-        return sink.query()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+        .writeStream.outputMode("complete")
+        .foreachBatch(sink),
+        checkpoint_dir,
+        confs={_SHUFFLE_CONF: state_partitions},
+    )
+    return sink.query()
 
 
 def run_streaming_session_windows_append(
@@ -1110,38 +1054,24 @@ def run_streaming_session_windows_append(
     trailing no-data micro-batch (on by default) flushes everything the
     final watermark finalizes.  Append emits each session once, so a plain
     distributed parquet sink is exact — no snapshot merge needed."""
-    import tempfile
-
     from stateful_spark_streaming_spark.operators.windows import session_windows
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_sessap_")
     out_dir = checkpoint_dir + "_out"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream_df = stream_events_source(
-            spark, events_path, max_files_per_trigger=max_files_per_trigger
-        ).withWatermark("ts", watermark_delay)
-        sessions = session_windows(stream_df, key=key, gap=gap)
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+    replay(
+        spark,
+        lambda s: session_windows(
+            stream_events_source(s, events_path, max_files_per_trigger)
+            .withWatermark("ts", watermark_delay),
+            key=key,
+            gap=gap,
         )
-        _await_or_die(q)
-        global _last_session_append_progress
-        _last_session_append_progress = [p for p in q.recentProgress]
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-
-#: debug introspection: per-batch progress of the last append-session run
-_last_session_append_progress: list = []
+        .writeStream.format("parquet")
+        .option("path", out_dir),
+        checkpoint_dir,
+        confs={_SHUFFLE_CONF: state_partitions},
+    )
+    return spark.read.parquet(out_dir)
 
 
 def _band_claim_fold(key, pdfs, state):
@@ -1168,25 +1098,6 @@ def _band_claim_fold(key, pdfs, state):
     is_dup = (rows["doc_id"] != winners) | rows["band_hash"].isin(claimed)
     state.update((list(claimed | set(rows["band_hash"].unique())),))
     yield pd.DataFrame({"doc_id": rows["doc_id"], "is_dup": is_dup})
-
-
-
-#: streaming state-store provider aliases — resolved by _resolve_state_store
-_STATE_STORE_CONF = "spark.sql.streaming.stateStore.providerClass"
-_STATE_STORE_PROVIDERS = {
-    "hdfs": "org.apache.spark.sql.execution.streaming.state."
-    "HDFSBackedStateStoreProvider",
-    "rocksdb": "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider",
-}
-
-
-def _resolve_state_store(name: str | None) -> str | None:
-    """Map a state-store alias to its provider class, raising on a bad
-    name BEFORE the caller mutates any session conf — the entry points
-    restore confs in a finally block, which cannot protect failures that
-    happen before the try begins."""
-    return None if name is None else _STATE_STORE_PROVIDERS[name]
 
 
 def run_streaming_dedup_minhash(
@@ -1248,8 +1159,9 @@ def run_streaming_dedup_minhash(
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import (
+        ArrayType,
         BooleanType,
-        LongType,
+        StringType,
         StructField,
         StructType,
     )
@@ -1260,26 +1172,21 @@ def run_streaming_dedup_minhash(
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_mhdedup_")
     out_dir = checkpoint_dir + "_out"
-    provider_class = _resolve_state_store(state_store)  # fail before conf set
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    parallelism = spark.sparkContext.defaultParallelism
     if state_partitions is None:
         # match core count, NOT the session's shuffle setting: a plain
         # session defaults to 200 shuffle partitions, and each state
         # partition costs an Arrow worker round + a state-store instance
         # per trigger — 200 of them for one replay batch is pure overhead
         # (core-count measured fastest: 7.1 s vs 9.1 s at 8 on local[32])
-        state_partitions = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    old_store = spark.conf.get(_STATE_STORE_CONF, None)
-    if provider_class is not None:
-        spark.conf.set(_STATE_STORE_CONF, provider_class)
-    try:
-        stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
-        # id type FROM THE INPUT, like the band kernel itself: string-id
-        # corpora are legitimate, and a hardcoded LongType here would pass
-        # the (generic) kernel then crash at the state fold's Arrow boundary
-        id_type = stream.schema[id_col].dataType
+        state_partitions = parallelism
+    confs = {
+        _SHUFFLE_CONF: state_partitions,
+        _STATE_STORE_CONF: _STATE_STORE_PROVIDERS[state_store],
+    }
 
+    def build(s: SparkSession):
+        stream = _stage_parquet_stream(s, documents_path, max_files_per_trigger)
         # numpy kernel, not the HOF fold: bit-identical bands (tested), but
         # the interpreted 32-way HOF fold measured 6.4 s vs 1.1 s for the
         # Arrow kernel at sf0.1 — on the ingest hot path that 6× matters.
@@ -1288,7 +1195,7 @@ def run_streaming_dedup_minhash(
         # streaming twin of batch dedup's _spread; at production rates the
         # source already has many splits and this is a near-no-op).
         items = minhash_band_rows_mapinpandas(
-            stream.repartition(spark.sparkContext.defaultParallelism),
+            stream.repartition(parallelism),
             text_col=text_col,
             id_col=id_col,
             k=k,
@@ -1300,8 +1207,6 @@ def run_streaming_dedup_minhash(
         # scale RAISE the bucket count so each bucket's claimed-set state
         # row stays bounded (buckets ~ corpus_bands / 10k keeps state rows
         # ~10k strings).
-        from pyspark.sql.types import ArrayType, StringType
-
         bucketed = items.withColumn(
             "bucket",
             F.pmod(F.xxhash64("band_hash"), F.lit(n_state_buckets)).cast("int"),
@@ -1310,7 +1215,11 @@ def run_streaming_dedup_minhash(
             _band_claim_fold,
             outputStructType=StructType(
                 [
-                    StructField("doc_id", id_type),
+                    # id type FROM THE INPUT, like the band kernel itself:
+                    # string-id corpora are legitimate, and a hardcoded
+                    # LongType would pass the (generic) kernel then crash
+                    # at the state fold's Arrow boundary
+                    StructField("doc_id", stream.schema[id_col].dataType),
                     StructField("is_dup", BooleanType()),
                 ]
             ),
@@ -1320,47 +1229,35 @@ def run_streaming_dedup_minhash(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+        return flagged.writeStream.foreachBatch(_admit).outputMode("update")
 
-        def _admit(bdf: DataFrame, batch_id: int) -> None:
-            (
-                bdf.groupBy("doc_id")
-                .agg(F.max(F.col("is_dup").cast("int")).alias("_d"))
-                .filter(F.col("_d") == 0)
-                .select("doc_id")
-                # id list is tiny relative to the corpus — don't spray 32
-                # near-empty files per batch
-                .coalesce(4)
-                .write.mode("append")
-                .parquet(out_dir)
-            )
-
-        q = (
-            flagged.writeStream.foreachBatch(_admit)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+    def _admit(bdf: DataFrame, batch_id: int) -> None:
+        (
+            bdf.groupBy("doc_id")
+            .agg(F.max(F.col("is_dup").cast("int")).alias("_d"))
+            .filter(F.col("_d") == 0)
+            .select("doc_id")
+            # id list is tiny relative to the corpus — don't spray 32
+            # near-empty files per batch
+            .coalesce(4)
+            .write.mode("append")
+            .parquet(out_dir)
         )
-        _await_or_die(q)
-        if not os.path.exists(out_dir):
-            # zero micro-batches ever fired (e.g. empty source dir):
-            # nothing was appended — return a typed empty frame, not a
-            # PATH_NOT_FOUND crash (same guard as run_streaming_ivf_topk)
-            return spark.createDataFrame(
-                [], StructType([StructField("doc_id", id_type)])
-            )
-        # distinct-on-read = replay idempotency: a crash between the
-        # foreachBatch append and the checkpoint commit re-appends the
-        # SAME byte-identical rows (each admitted doc belongs to exactly
-        # one batch), so distinct restores exactly-once
-        return spark.read.parquet(out_dir).distinct()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        if provider_class is not None:
-            if old_store is not None:
-                spark.conf.set(_STATE_STORE_CONF, old_store)
-            else:
-                spark.conf.unset(_STATE_STORE_CONF)
+
+    replay(spark, build, checkpoint_dir, confs=confs)
+    if not os.path.exists(out_dir):
+        # zero micro-batches ever fired (e.g. empty source dir):
+        # nothing was appended — return a typed empty frame, not a
+        # PATH_NOT_FOUND crash (same guard as run_streaming_ivf_topk)
+        id_type = spark.read.parquet(documents_path).schema[id_col].dataType
+        return spark.createDataFrame(
+            [], StructType([StructField("doc_id", id_type)])
+        )
+    # distinct-on-read = replay idempotency: a crash between the
+    # foreachBatch append and the checkpoint commit re-appends the
+    # SAME byte-identical rows (each admitted doc belongs to exactly
+    # one batch), so distinct restores exactly-once
+    return spark.read.parquet(out_dir).distinct()
 
 
 def run_streaming_decontaminate(
@@ -1392,47 +1289,42 @@ def run_streaming_decontaminate(
 
     from stateful_spark_streaming_spark.operators.text import shingles
 
+    from stateful_spark_streaming_spark.operators.dedup import _shingle_index
+
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_decon_")
     out_dir = checkpoint_dir + "_out"
-    stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
-    if train_filter is not None:
-        stream = stream.filter(train_filter)
-
     ev_shingles = (
         eval_df.select(F.explode(shingles(F.col(text_col), k)).alias("shingle"))
         .distinct()
     )
-    # stream side through the Arrow shingle-index kernel (identical distinct
-    # set semantics, pytested; it spreads the single-file replay batch
-    # itself) — the interpreted HOF chain was the stream's dominant cost
-    from stateful_spark_streaming_spark.operators.dedup import _shingle_index
 
-    hits = (
-        _shingle_index(stream, text_col, id_col, k)
-        .select(F.col("doc").alias("doc_id"), "shingle")
-        .join(F.broadcast(ev_shingles), "shingle", "left_semi")
-        .select("doc_id")
-    )
+    def build(s: SparkSession):
+        stream = _stage_parquet_stream(s, documents_path, max_files_per_trigger)
+        if train_filter is not None:
+            stream = stream.filter(train_filter)
+        # stream side through the Arrow shingle-index kernel (identical
+        # distinct set semantics, pytested; it spreads the single-file
+        # replay batch itself) — the interpreted HOF chain was the
+        # stream's dominant cost
+        return (
+            _shingle_index(stream, text_col, id_col, k)
+            .select(F.col("doc").alias("doc_id"), "shingle")
+            .join(F.broadcast(ev_shingles), "shingle", "left_semi")
+            .select("doc_id")
+            .writeStream.foreachBatch(_sink)
+        )
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         bdf.distinct().write.mode("append").parquet(out_dir)
 
-    q = (
-        hits.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    replay(spark, build, checkpoint_dir)
     if not os.path.exists(out_dir):
         # zero micro-batches (empty source / filter matched nothing):
         # typed empty result, not a PATH_NOT_FOUND crash
         from pyspark.sql.types import StructField, StructType
 
-        return spark.createDataFrame(
-            [], StructType([StructField("doc_id", stream.schema[id_col].dataType)])
-        )
+        id_type = spark.read.parquet(documents_path).schema[id_col].dataType
+        return spark.createDataFrame([], StructType([StructField("doc_id", id_type)]))
     # distinct-on-read = replay idempotency (see run_streaming_dedup_minhash)
     return spark.read.parquet(out_dir).distinct()
 
@@ -1472,7 +1364,6 @@ def run_streaming_vocab(
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_vocab_")
     out_dir = checkpoint_dir + "_partials"
-    stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         part = (
@@ -1491,14 +1382,7 @@ def run_streaming_vocab(
             "append"
         ).parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
 
     from stateful_spark_streaming_spark.operators.text import vocab_rank
 
@@ -1574,7 +1458,6 @@ def run_streaming_lm_logprob(
         prefix=f"sss_ckpt_lm{order}_"
     )
     out_dir = checkpoint_dir + "_counts"
-    stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
     keys = ["doc_id", "token"] if order == 1 else ["doc_id", "w1", "w2"]
     score = unigram_score_from_counts if order == 1 else bigram_score_from_counts
 
@@ -1593,21 +1476,14 @@ def run_streaming_lm_logprob(
             "append"
         ).parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
 
     if not os.path.exists(out_dir):
         # zero micro-batches: empty scores through the SAME scoring tail
         # over a typed empty count frame — schema derived, not hand-kept
         from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-        fields = [StructField("doc_id", stream.schema[id_col].dataType)]
+        fields = [StructField("doc_id", spark.read.parquet(documents_path).schema[id_col].dataType)]
         fields += [StructField(c, StringType()) for c in keys[1:]]
         fields += [StructField("c", LongType())]
         return score(spark.createDataFrame([], StructType(fields)))
@@ -1651,7 +1527,6 @@ def run_streaming_distinct_stats(
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_hll_")
     out_dir = checkpoint_dir + "_sketches"
-    stream = _stage_parquet_stream(spark, events_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         (
@@ -1666,14 +1541,7 @@ def run_streaming_distinct_stats(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    replay(spark, _parquet_batches(events_path, max_files_per_trigger, _sink), checkpoint_dir)
 
     if not os.path.exists(out_dir):
         from pyspark.sql.types import (
@@ -1687,7 +1555,7 @@ def run_streaming_distinct_stats(
             [],
             StructType(
                 [
-                    StructField(key, stream.schema[key].dataType),
+                    StructField(key, spark.read.parquet(events_path).schema[key].dataType),
                     StructField("n_rows", LongType()),
                     StructField("sk", BinaryType()),
                     StructField("_batch_id", LongType()),
@@ -1747,7 +1615,6 @@ def run_streaming_distinct_kmv(
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_kmv_")
     out_dir = checkpoint_dir + "_sketches"
-    stream = _stage_parquet_stream(spark, events_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         counts = bdf.groupBy(key).agg(F.count(F.lit(1)).alias("n_rows"))
@@ -1770,14 +1637,7 @@ def run_streaming_distinct_kmv(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    replay(spark, _parquet_batches(events_path, max_files_per_trigger, _sink), checkpoint_dir)
 
     if not os.path.exists(out_dir):
         from pyspark.sql.types import (
@@ -1791,7 +1651,7 @@ def run_streaming_distinct_kmv(
             [],
             StructType(
                 [
-                    StructField(key, stream.schema[key].dataType),
+                    StructField(key, spark.read.parquet(events_path).schema[key].dataType),
                     StructField("n_rows", LongType()),
                     StructField("hs", ArrayType(LongType())),
                     StructField("_batch_id", LongType()),
@@ -1889,7 +1749,6 @@ def run_streaming_image_keep_best(
     out_dir = checkpoint_dir + "_partials"
     null_dir = checkpoint_dir + "_nullids"
     nbits = grid * grid
-    stream = _stage_parquet_stream(spark, images_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         # coalesce NULL quality (NULL width/height) to -1 — the batch
@@ -1942,14 +1801,7 @@ def run_streaming_image_keep_best(
             nulls.coalesce(1).write.mode("append").parquet(null_dir)
         hashed.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    replay(spark, _parquet_batches(images_path, max_files_per_trigger, _sink), checkpoint_dir)
 
     from pyspark.sql.types import (
         LongType,
@@ -2048,7 +1900,6 @@ def run_streaming_quality_histogram(
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_qhist_")
     out_dir = checkpoint_dir + "_hist"
-    stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         # NULL bins drop AFTER the aggregate, from a persisted counts
@@ -2079,14 +1930,7 @@ def run_streaming_quality_histogram(
         finally:
             counts.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
 
     if not os.path.exists(out_dir):
         staged = spark.createDataFrame(
@@ -2131,7 +1975,6 @@ def run_streaming_source_drift(
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_drift_")
     out_dir = checkpoint_dir + "_counts"
-    stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         part = unigram_source_counts(bdf, group_col=group_col)
@@ -2139,14 +1982,7 @@ def run_streaming_source_drift(
             "append"
         ).parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
 
     if not os.path.exists(out_dir):
         staged = spark.createDataFrame(
@@ -2197,7 +2033,6 @@ def run_streaming_heavy_hitters(
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_cms_")
     ctr_dir = checkpoint_dir + "_counters"
     cand_dir = checkpoint_dir + "_cands"
-    stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         occ = _token_occurrences(bdf, text_col, id_col)
@@ -2209,14 +2044,7 @@ def run_streaming_heavy_hitters(
             "_batch_id", F.lit(batch_id)
         ).coalesce(1).write.mode("append").parquet(cand_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
 
     if not os.path.exists(ctr_dir):
         counters = spark.createDataFrame([], "r int, b int, n bigint")
@@ -2473,8 +2301,8 @@ def run_streaming_merge_upsert(
     # is authoritative).
     _schema_holder = {"schema": spark.read.parquet(table_dir).schema}
 
-    def _read_table():
-        return spark.read.schema(_schema_holder["schema"]).parquet(table_dir)
+    def _read_table(s: SparkSession) -> DataFrame:
+        return s.read.schema(_schema_holder["schema"]).parquet(table_dir)
 
     def _refresh_schema() -> None:
         _schema_holder["schema"] = spark.read.parquet(table_dir).schema
@@ -2504,14 +2332,11 @@ def run_streaming_merge_upsert(
                 "loss this refusal exists to surface — schema_evolution=True "
                 "widens the table and lets the feed proceed.)"
             )
-    stream = _stage_parquet_stream(
-        spark, changes_path, max_files_per_trigger, merge_schema=schema_evolution
-    )
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         recover_generation(table_dir, clean=True)  # drop any stale .tmp
         recover_partitions(table_dir)
-        cur = _read_table()
+        cur = _read_table(bdf.sparkSession)
         batch_ready = bdf.withColumnRenamed(seq_col, "__seq")
         if schema_evolution:
             # replay-safe: an already-widened table sees no new columns
@@ -2575,7 +2400,9 @@ def run_streaming_merge_upsert(
         if len(touched) <= max_pred_terms:
             cur_touched = cur.filter(F.col("__bucket").isin(touched))
         else:
-            tdf = spark.createDataFrame([(int(b),) for b in touched], "__b long")
+            tdf = bdf.sparkSession.createDataFrame(
+                [(int(b),) for b in touched], "__b long"
+            )
             cur_touched = cur.join(
                 F.broadcast(tdf), cur["__bucket"] == tdf["__b"], "left_semi"
             )
@@ -2592,21 +2419,17 @@ def run_streaming_merge_upsert(
             table_dir, staging_dir, list_staged_partitions(staging_dir, 1)
         )
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+    replay(
+        spark,
+        lambda s: _stage_parquet_stream(
+            s, changes_path, max_files_per_trigger, merge_schema=schema_evolution
         )
-        _await_or_die(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    out = merged_view(_read_table())
+        .writeStream.foreachBatch(_sink)
+        .outputMode("update"),
+        checkpoint_dir,
+        confs={_SHUFFLE_CONF: shuffle_partitions},
+    )
+    out = merged_view(_read_table(spark))
     return out.drop("__bucket") if n_buckets else out
 
 
@@ -2757,9 +2580,6 @@ def run_streaming_incremental_agg(
     # partition); partition discovery itself stays, it's just listing
     tbl_schema = spark.read.parquet(table_dir).schema
 
-    def _read_table():
-        return spark.read.schema(tbl_schema).parquet(table_dir)
-
     # stream-START guard over the UNION of all change-file footers — same
     # rationale as run_streaming_merge_upsert's: the per-batch guard in
     # _sink can only see columns the fixed stream schema (one footer)
@@ -2775,8 +2595,6 @@ def run_streaming_incremental_agg(
             "or maintain the table with "
             "run_streaming_merge_upsert(schema_evolution=True)"
         )
-
-    stream = _stage_parquet_stream(spark, changes_path, max_files_per_trigger)
 
     def _affected_pred(rows):
         """Static partition-pruning predicate from the frozen affected
@@ -2798,7 +2616,10 @@ def run_streaming_incremental_agg(
         recover_generation(table_dir, clean=True)
         recover_partitions(table_dir)
         recover_generation(agg_dir, clean=True)
-        cur = _read_table()
+        # in-batch reads go through the replay's session, which carries
+        # the shuffle_partitions pin
+        session = bdf.sparkSession
+        cur = session.read.schema(tbl_schema).parquet(table_dir)
         # a feed that grew a column would otherwise be SILENTLY dropped:
         # merge_apply_batch projects data columns from the TABLE's schema,
         # so the new column never lands and no error surfaces.  The MV
@@ -2834,7 +2655,7 @@ def run_streaming_incremental_agg(
                 checkpoint_dir + "_affected", f"batch={batch_id}"
             )
             if os.path.exists(os.path.join(sidecar, "_SUCCESS")):
-                affected = spark.read.parquet(sidecar)
+                affected = session.read.parquet(sidecar)
             else:
                 # old_side over the RAW table (tombstones INCLUDED): a
                 # re-inserted previously-deleted key must pull its
@@ -2846,7 +2667,7 @@ def run_streaming_incremental_agg(
                 affected_groups(
                     cur, add_group(bdf), key_cols, group_cols
                 ).write.mode("overwrite").parquet(sidecar)
-                affected = spark.read.parquet(sidecar)
+                affected = session.read.parquet(sidecar)
         rows = affected.collect()
         if not rows:
             return  # empty change batch touches nothing
@@ -2987,11 +2808,13 @@ def run_streaming_incremental_agg(
         # lineage points at pre-swap files — persist() alone does not
         # guarantee cached blocks survive to the agg refresh, and a
         # post-swap recompute against retired files fails the batch.
-        refresh_detail = aff_filter(merged_view(_read_table()))
+        refresh_detail = aff_filter(
+            merged_view(session.read.schema(tbl_schema).parquet(table_dir))
+        )
         # refresh with the PRE-swap affected set: together with the
         # durable sidecar this makes the two-swap window replay-safe for
         # every change class, including group moves
-        cur_agg = spark.read.parquet(agg_dir)
+        cur_agg = session.read.parquet(agg_dir)
         nxt_agg = refresh_groups(
             cur_agg, refresh_detail, affected, group_cols, agg_fn
         )
@@ -3007,20 +2830,14 @@ def run_streaming_incremental_agg(
 
             shutil.rmtree(sidecar, ignore_errors=True)
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_die(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    replay(
+        spark,
+        lambda s: _stage_parquet_stream(s, changes_path, max_files_per_trigger)
+        .writeStream.foreachBatch(_sink)
+        .outputMode("update"),
+        checkpoint_dir,
+        confs={_SHUFFLE_CONF: shuffle_partitions},
+    )
     return spark.read.parquet(agg_dir)
 
 
@@ -3047,9 +2864,6 @@ def run_streaming_partitioned_ingest(
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_ping_")
     out_dir = out_dir or checkpoint_dir + "_data"
-    stream = stream_events_source(
-        spark, events_path, max_files_per_trigger=max_files_per_trigger
-    )
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         (
@@ -3061,14 +2875,12 @@ def run_streaming_partitioned_ingest(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    replay(
+        spark,
+        lambda s: stream_events_source(s, events_path, max_files_per_trigger)
+        .writeStream.foreachBatch(_sink),
+        checkpoint_dir,
     )
-    _await_or_die(q)
     return out_dir
 
 
@@ -3111,7 +2923,6 @@ def run_streaming_corpus_report(
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_creport_")
     stats_dir = checkpoint_dir + "_stats"
     fps_dir = checkpoint_dir + "_fps"
-    stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         # normalize the id ONCE so both sinks honor a non-default id_col
@@ -3153,14 +2964,7 @@ def run_streaming_corpus_report(
             .parquet(fps_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
 
     if not os.path.exists(stats_dir):
         # zero micro-batches: empty card through the SAME merge code over
@@ -3181,7 +2985,7 @@ def run_streaming_corpus_report(
                     StructField("source", StringType()),
                     StructField("n", LongType()),
                     # id-typed from the input: string doc ids are legitimate
-                    StructField("min_doc", stream.schema[id_col].dataType),
+                    StructField("min_doc", spark.read.parquet(documents_path).schema[id_col].dataType),
                     StructField("_batch_id", LongType()),
                 ]
             ),
@@ -3282,7 +3086,6 @@ def run_streaming_dup_spans(
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_spans_")
     out_dir = checkpoint_dir + "_index"
-    stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         (
@@ -3299,14 +3102,7 @@ def run_streaming_dup_spans(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
 
     if not os.path.exists(out_dir):
         # zero micro-batches: empty span set, not a PATH_NOT_FOUND crash.
@@ -3323,7 +3119,7 @@ def run_streaming_dup_spans(
             [],
             StructType(
                 [
-                    StructField("doc", stream.schema[id_col].dataType),
+                    StructField("doc", spark.read.parquet(documents_path).schema[id_col].dataType),
                     StructField("pos", IntegerType()),
                     StructField("gh", LongType()),
                 ]
@@ -3376,9 +3172,6 @@ def run_streaming_ivf_topk(
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_ivfq_")
     out_dir = checkpoint_dir + "_out"
     index = ivf_load_index(spark, index_path)
-    stream = _stage_parquet_stream(spark, queries_path, max_files_per_trigger)
-    if query_filter is not None:
-        stream = stream.filter(query_filter)
 
     # embeddings frame for the corpus side of ivf_topk: the index itself
     emb = index[0].drop("cell")
@@ -3401,14 +3194,13 @@ def run_streaming_ivf_topk(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    def build(s: SparkSession):
+        stream = _stage_parquet_stream(s, queries_path, max_files_per_trigger)
+        if query_filter is not None:
+            stream = stream.filter(query_filter)
+        return stream.writeStream.foreachBatch(_probe)
+
+    replay(spark, build, checkpoint_dir)
     if not os.path.exists(out_dir):
         # every micro-batch was empty (e.g. a query_filter matching no
         # rows): nothing was ever appended — return the empty frame the
@@ -3481,21 +3273,13 @@ def run_streaming_ivf_ingest(
     )
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_ivfing_")
-    stream = _stage_parquet_stream(spark, vectors_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         _ivf_assign_and_append(
             bdf, index_path, cents, stored_cols, id_col, vec_col
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    replay(spark, _parquet_batches(vectors_path, max_files_per_trigger, _sink), checkpoint_dir)
     assigned, cents = ivf_load_index(spark, index_path)
     return assigned.dropDuplicates([id_col]), cents
 
@@ -3540,86 +3324,54 @@ def run_streaming_event_pairs(
     path measures ~2× faster than RocksDB's.  Pass ``'rocksdb'`` (or None
     to inherit the session) when the tolerance×rate product makes buffered
     state bigger than executor memory."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_ssj_")
     out_dir = checkpoint_dir + "_out"
-    provider_class = _resolve_state_store(state_store)  # fail before conf set
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    old_store = spark.conf.get(_STATE_STORE_CONF, None)
-    if provider_class is not None:
-        spark.conf.set(_STATE_STORE_CONF, provider_class)
-    try:
-        a = stream_events_source(
-            spark, events_path, max_files_per_trigger=max_files_per_trigger
-        )
-        if left_type is not None:
-            a = a.filter(F.col("event_type") == left_type)
-        a = a.select(
-            F.col(key).alias("user_id"),
-            F.col("event_id").alias("id_a"),
-            F.col("ts").alias("ts_a"),
-        ).withWatermark("ts_a", watermark_delay)
-        b = stream_events_source(
-            spark, events_path, max_files_per_trigger=max_files_per_trigger
-        )
-        if right_type is not None:
-            b = b.filter(F.col("event_type") == right_type)
-        b = b.select(
-            F.col(key).alias("user_id_b"),
-            F.col("event_id").alias("id_b"),
-            F.col("ts").alias("ts_b"),
-        ).withWatermark("ts_b", watermark_delay)
-        tol = F.expr(f"INTERVAL {tolerance_seconds} SECONDS")
-        cond = (
-            (F.col("user_id") == F.col("user_id_b"))
-            & (F.col("ts_b") >= F.col("ts_a") - tol)
-            & (F.col("ts_b") <= F.col("ts_a") + tol)
-        )
-        if left_type is None and right_type is None:
-            cond = cond & (F.col("id_a") < F.col("id_b"))
-        gap = F.abs(F.unix_millis("ts_a") - F.unix_millis("ts_b"))
-        if how != "inner":  # outer rows carry NULL match columns
-            gap = F.when(F.col("id_b").isNotNull(), gap)
-        pairs = a.join(b, cond, how).select(
-            "user_id", "id_a", "id_b", gap.alias("gap_ms")
-        )
-        from contextlib import nullcontext
+    confs = {
+        _SHUFFLE_CONF: state_partitions,
+        _STATE_STORE_CONF: _STATE_STORE_PROVIDERS[state_store],
+    }
 
-        # INNER joins emit every pair in the data batch where its second
-        # side arrives — the trailing no-data batch only evicts buffered
-        # state (output-identical without it; measured ~0.9 s of a ~2.5 s
-        # bounded replay).  OUTER joins EMIT null-matched rows from that
-        # batch when the watermark passes their horizon — they keep it.
-        ctx = _without_no_data_batches(spark) if how == "inner" else nullcontext()
-        with ctx:
-            q = (
-                pairs.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_or_die(q)
-        global _last_join_progress
-        _last_join_progress = [p for p in q.recentProgress]
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        if provider_class is not None:
-            if old_store is not None:
-                spark.conf.set(_STATE_STORE_CONF, old_store)
-            else:
-                spark.conf.unset(_STATE_STORE_CONF)
+    def side(s: SparkSession, event_type, uid: str, eid: str, ts: str) -> DataFrame:
+        df = stream_events_source(s, events_path, max_files_per_trigger)
+        if event_type is not None:
+            df = df.filter(F.col("event_type") == event_type)
+        return df.select(
+            F.col(key).alias(uid), F.col("event_id").alias(eid), F.col("ts").alias(ts)
+        ).withWatermark(ts, watermark_delay)
 
+    tol = F.expr(f"INTERVAL {tolerance_seconds} SECONDS")
+    cond = (
+        (F.col("user_id") == F.col("user_id_b"))
+        & (F.col("ts_b") >= F.col("ts_a") - tol)
+        & (F.col("ts_b") <= F.col("ts_a") + tol)
+    )
+    if left_type is None and right_type is None:
+        cond = cond & (F.col("id_a") < F.col("id_b"))
+    gap = F.abs(F.unix_millis("ts_a") - F.unix_millis("ts_b"))
+    if how != "inner":  # outer rows carry NULL match columns
+        gap = F.when(F.col("id_b").isNotNull(), gap)
 
-#: debug introspection: per-batch progress of the last stream-stream join run
-_last_join_progress: list = []
+    def build(s: SparkSession):
+        a = side(s, left_type, "user_id", "id_a", "ts_a")
+        b = side(s, right_type, "user_id_b", "id_b", "ts_b")
+        return (
+            a.join(b, cond, how)
+            .select("user_id", "id_a", "id_b", gap.alias("gap_ms"))
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+        )
+
+    # INNER joins emit every pair in the data batch where its second side
+    # arrives — the trailing no-data batch only evicts buffered state
+    # (measured ~0.9 s of a ~2.5 s bounded replay).  OUTER joins EMIT
+    # null-matched rows from that batch when the watermark passes their
+    # horizon — they keep it.
+    replay(
+        spark, build, checkpoint_dir, confs=confs, emits_on_no_data=how != "inner"
+    )
+    return spark.read.parquet(out_dir)
 
 
 def run_streaming_event_pairs_left(
@@ -3656,8 +3408,6 @@ def run_streaming_event_pairs_left(
     append mode means a plain distributed parquet sink is exact.  At
     100 TB this is impressions-without-clicks over two firehoses — the
     outer variant is what funnel loss analysis actually needs."""
-    import tempfile
-
     return run_streaming_event_pairs(
         spark,
         events_path,
@@ -3695,25 +3445,22 @@ def run_streaming_enriched_counts(
     of the stream, no state for the join itself; only the downstream
     aggregate keeps (groups) state.  The canonical 100 TB form for
     firehose × slowly-changing-dim enrichment."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_enrich_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream_df = stream_events_source(
-            spark, events_path, max_files_per_trigger=max_files_per_trigger
-        )
-        enriched = stream_df.join(
-            F.broadcast(dim.select(dim_key, dim_col)),
-            stream_df["user_id"] == F.col(dim_key),
-            "inner",
-        )
-        counts = (
-            enriched.groupBy(dim_col, "event_type")
+    sink = ParquetSnapshotSink(
+        spark, "StreamingEnriched", "grp_key", path=f"{checkpoint_dir}_snapshot"
+    )
+
+    def build(s: SparkSession):
+        stream_df = stream_events_source(s, events_path, max_files_per_trigger)
+        return (
+            stream_df.join(
+                F.broadcast(dim.select(dim_key, dim_col)),
+                stream_df["user_id"] == F.col(dim_key),
+                "inner",
+            )
+            .groupBy(dim_col, "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.round(F.sum("value"), 2).alias("sum_value"),
@@ -3721,21 +3468,12 @@ def run_streaming_enriched_counts(
             .withColumn(
                 "grp_key", F.concat_ws("|", F.col(dim_col), F.col("event_type"))
             )
-        )
-        sink = ParquetSnapshotSink(
-            spark, "StreamingEnriched", "grp_key", path=f"{checkpoint_dir}_snapshot"
-        )
-        q = (
-            counts.writeStream.outputMode("update")
+            .writeStream.outputMode("update")
             .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_or_die(q)
-        return sink.query().drop("grp_key")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+
+    replay(spark, build, checkpoint_dir, confs={_SHUFFLE_CONF: state_partitions})
+    return sink.query().drop("grp_key")
 
 
 def run_streaming_tumbling_counts(
@@ -3752,29 +3490,18 @@ def run_streaming_tumbling_counts(
 
     The same graph runs unmodified against an unbounded source; there a
     ``withWatermark`` upstream bounds window state."""
-    import tempfile
-
     from stateful_spark_streaming_spark.operators.windows import tumbling_counts
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_win_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream_df = stream_events_source(spark, events_path)
-        windowed = tumbling_counts(stream_df, width=width)
-        sink = ParquetSnapshotSink(
-            spark, "StreamingTumbling", "bucket_ms",
-            path=f"{checkpoint_dir}_snapshot",
-        )
-        q = (
-            windowed.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_die(q)
-        return sink.query()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    sink = ParquetSnapshotSink(
+        spark, "StreamingTumbling", "bucket_ms", path=f"{checkpoint_dir}_snapshot"
+    )
+    replay(
+        spark,
+        lambda s: tumbling_counts(stream_events_source(s, events_path), width=width)
+        .writeStream.outputMode("update")
+        .foreachBatch(sink),
+        checkpoint_dir,
+        confs={_SHUFFLE_CONF: state_partitions},
+    )
+    return sink.query()

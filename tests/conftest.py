@@ -1,6 +1,10 @@
 from __future__ import annotations
 
+import json
+import threading
+
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 from stateful_spark_streaming_spark.session import get_spark
 
@@ -23,6 +27,44 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+class ProgressRecorder(StreamingQueryListener):
+    """Records what the session's streaming queries report — including
+    the replays the runners start in cloned sessions, to which the
+    session's listeners are forwarded: every progress record as parsed
+    JSON, and the ids of started and terminated queries, in delivery
+    order."""
+
+    def __init__(self):
+        self.progress: list[dict] = []
+        self.started: list[str] = []
+        self.terminated: list[str] = []
+        self._lock = threading.Lock()
+
+    def onQueryStarted(self, event):
+        with self._lock:
+            self.started.append(str(event.id))
+
+    def onQueryProgress(self, event):
+        with self._lock:
+            self.progress.append(json.loads(event.progress.json))
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        with self._lock:
+            self.terminated.append(str(event.id))
+
+
+@pytest.fixture
+def progress(spark):
+    """A ProgressRecorder registered on the test session for one test."""
+    rec = ProgressRecorder()
+    spark.streams.addListener(rec)
+    yield rec
+    spark.streams.removeListener(rec)
 
 
 def ref_interleave(a: int, b: int, bits: int = 10) -> int:

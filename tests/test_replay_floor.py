@@ -1,22 +1,25 @@
 """r15 streaming replay-floor optimizations — output-equivalence pins.
 
-Three mechanisms cut the per-replay fixed cost (OPTIMIZATION_r15.md):
+Three mechanisms cut the per-replay fixed cost (recorded in CHANGES.md):
 
 1. ``ParquetSnapshotSink`` registers its merge-on-read temp view ON READ
    (``query()``/``show``), not after every micro-batch — the per-trigger
    registration re-listed the log/base dirs and rebuilt the merged plan
    for no consumer.
-2. ``_without_no_data_batches``: replays whose OUTPUT provably does not
-   depend on the trailing no-data micro-batch (append dedup, INNER
-   stream-stream joins) skip it; the eviction-only batch cost a full
-   trigger cycle per replay.
+2. ``replay(..., emits_on_no_data=False)``: runners whose OUTPUT provably
+   does not depend on the trailing no-data micro-batch (append dedup,
+   INNER stream-stream joins) declare it, and their replays skip that
+   batch; the eviction-only batch cost a full trigger cycle per replay.
 3. The bucketed-merge gate query self-sizes ``n_buckets`` from table
    bytes (``"auto"``); the scoped bucket-swap coverage it used to force
    with n_buckets=128 lives in
    test_merge.py::test_streaming_merge_bucketed_gate_shape_scoped_swap.
 
 Every pin here is an EQUALITY pin: the optimized path's rows must be
-byte-identical to the unoptimized path's on the same feed.
+byte-identical to the unoptimized path's on the same feed.  The no-data
+pins also count, through a listener on the test's session, the zero-input
+triggers of both runs, so the unoptimized run provably ran the batch the
+optimized one skips.
 """
 
 from __future__ import annotations
@@ -77,6 +80,21 @@ def test_console_sink_still_registers_per_batch(spark, tmp_path, capsys):
     assert "========= R15ConsoleSnap" in out and "x" in out
 
 
+def _with_no_data_batch(monkeypatch) -> None:
+    """Force every runner's replay to run the trailing no-data batch —
+    the unoptimized path the no-data pins compare against."""
+    from stateful_spark_streaming_spark.streaming import pipeline as P
+
+    real = P.replay
+    monkeypatch.setattr(
+        P, "replay", lambda *a, **kw: real(*a, **{**kw, "emits_on_no_data": True})
+    )
+
+
+def _zero_input_triggers(records) -> int:
+    return sum(1 for d in records if d["numInputRows"] == 0)
+
+
 def _dedup_feed(spark, tmp_path, name):
     return land_batches(
         spark,
@@ -90,16 +108,16 @@ def _dedup_feed(spark, tmp_path, name):
     )
 
 
-def test_streaming_dedup_output_identical_without_no_data_batch(spark, tmp_path):
+def test_streaming_dedup_output_identical_without_no_data_batch(
+    spark, tmp_path, progress, monkeypatch
+):
     """The no-data-batch skip is output-invariant for append-mode
-    dropDuplicatesWithinWatermark: same feed, flag forced ON vs the
-    runner's OFF → identical rows.  (Retained rows are emitted in the
-    data batch that first carries them; the trailing batch only evicts
-    state.)"""
-    from stateful_spark_streaming_spark.streaming.pipeline import (
-        _NO_DATA_CONF,
-        run_streaming_dedup,
-    )
+    dropDuplicatesWithinWatermark: the same feed replayed WITH the
+    trailing batch (exactly one more zero-input trigger) and with the
+    runner's skip gives identical rows.  (Retained rows are emitted in
+    the data batch that first carries them; the trailing batch only
+    evicts state.)"""
+    from stateful_spark_streaming_spark.streaming.pipeline import run_streaming_dedup
 
     src = _dedup_feed(spark, tmp_path, "ev_off")
     out_off = run_streaming_dedup(
@@ -107,23 +125,18 @@ def test_streaming_dedup_output_identical_without_no_data_batch(spark, tmp_path)
         max_files_per_trigger=1,
     )
     rows_off = sorted((r.user_id, r.event_type) for r in out_off.collect())
+    n_off = len(progress.progress)
 
-    # force the engine default back ON around the runner: its internal
-    # opt-out uses a snapshot/restore context, so pre-setting "true"
-    # must be restored afterwards too
-    spark.conf.set(_NO_DATA_CONF, "true")
-    try:
-        src2 = _dedup_feed(spark, tmp_path, "ev_on")
-        out_on = run_streaming_dedup(
-            spark, src2, checkpoint_dir=str(tmp_path / "ck_on"),
-            max_files_per_trigger=1,
-        )
-        rows_on = sorted((r.user_id, r.event_type) for r in out_on.collect())
-        assert spark.conf.get(_NO_DATA_CONF) == "true", (
-            "runner leaked its no-data-batch override into the session"
-        )
-    finally:
-        spark.conf.unset(_NO_DATA_CONF)
+    _with_no_data_batch(monkeypatch)
+    src2 = _dedup_feed(spark, tmp_path, "ev_on")
+    out_on = run_streaming_dedup(
+        spark, src2, checkpoint_dir=str(tmp_path / "ck_on"),
+        max_files_per_trigger=1,
+    )
+    rows_on = sorted((r.user_id, r.event_type) for r in out_on.collect())
+    assert _zero_input_triggers(progress.progress[n_off:]) == (
+        _zero_input_triggers(progress.progress[:n_off]) + 1
+    ), "the forced-ON run did not run the trailing no-data batch"
     assert rows_off == rows_on == [(1, "a"), (1, "b"), (2, "a"), (3, "c")]
 
 
@@ -143,13 +156,15 @@ def _pairs_feed(spark, tmp_path, name):
     )
 
 
-def test_inner_event_pairs_output_identical_without_no_data_batch(spark, tmp_path):
+def test_inner_event_pairs_output_identical_without_no_data_batch(
+    spark, tmp_path, progress, monkeypatch
+):
     """INNER stream-stream join: pairs are emitted in the data batch where
     the second side arrives — the trailing eviction batch adds nothing.
-    Same feed with the engine default ON vs the runner's OFF → identical
-    pair sets, including the cross-batch match."""
+    Same feed with the trailing batch (exactly one more zero-input
+    trigger) vs the runner's skip → identical pair sets, including the
+    cross-batch match."""
     from stateful_spark_streaming_spark.streaming.pipeline import (
-        _NO_DATA_CONF,
         run_streaming_event_pairs,
     )
 
@@ -160,18 +175,18 @@ def test_inner_event_pairs_output_identical_without_no_data_batch(spark, tmp_pat
         max_files_per_trigger=1,
     )
     rows_off = sorted(tuple(r) for r in off.select(*cols).collect())
+    n_off = len(progress.progress)
 
-    spark.conf.set(_NO_DATA_CONF, "true")
-    try:
-        src2 = _pairs_feed(spark, tmp_path, "pv_on")
-        on = run_streaming_event_pairs(
-            spark, src2, checkpoint_dir=str(tmp_path / "pck_on"),
-            max_files_per_trigger=1,
-        )
-        rows_on = sorted(tuple(r) for r in on.select(*cols).collect())
-        assert spark.conf.get(_NO_DATA_CONF) == "true"
-    finally:
-        spark.conf.unset(_NO_DATA_CONF)
+    _with_no_data_batch(monkeypatch)
+    src2 = _pairs_feed(spark, tmp_path, "pv_on")
+    on = run_streaming_event_pairs(
+        spark, src2, checkpoint_dir=str(tmp_path / "pck_on"),
+        max_files_per_trigger=1,
+    )
+    rows_on = sorted(tuple(r) for r in on.select(*cols).collect())
+    assert _zero_input_triggers(progress.progress[n_off:]) == (
+        _zero_input_triggers(progress.progress[:n_off]) + 1
+    ), "the forced-ON run did not run the trailing no-data batch"
     assert rows_off == rows_on
     # the cross-batch pair (user 2: 12×13, 360 s apart) must be present —
     # proof the state store, not single-batch locality, produced the match
