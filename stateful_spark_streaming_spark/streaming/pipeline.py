@@ -744,8 +744,13 @@ def replay(
     for k, v in pins.items():
         if v is not None:
             clone.conf.set(k, str(v))
-    listeners = list(spark._jsparkSession.streams().listListeners())
     jstreams = clone._jsparkSession.streams()
+    # a shared listener every session registers itself (the UI's) is
+    # already on the clone; forwarding it again would deliver twice
+    own = jstreams.listListeners()
+    listeners = [
+        li for li in spark._jsparkSession.streams().listListeners() if li not in own
+    ]
     for listener in listeners:
         jstreams.addListener(listener)
     try:
