@@ -717,9 +717,9 @@ def replay(
     through ``bdf.sparkSession``), while the caller's session is never
     mutated and concurrent replays on one session cannot see each
     other's pins.  The caller's streaming listeners are forwarded to the
-    clone for the run and detached once the listener bus has delivered
-    its last event, so they see every started/progress/terminated event
-    of the replay before this returns.
+    clone, so they see every started/progress/terminated event of the
+    replay, delivered asynchronously as for any query of their own
+    session.
 
     ``emits_on_no_data=False`` declares that the OUTPUT cannot depend on
     the trailing no-data micro-batch a watermarked query runs after its
@@ -769,15 +769,27 @@ def replay(
             )
     finally:
         if listeners:
-            bus = spark.sparkContext._jsc.sc().listenerBus()
-            _swallow(lambda: bus.waitUntilEmpty(10_000))
-            for listener in listeners:
-                jstreams.removeListener(listener)
+            threading.Thread(
+                target=_detach_when_delivered,
+                args=(spark, jstreams, listeners),
+                daemon=True,
+            ).start()
+
+
+def _detach_when_delivered(spark: SparkSession, jstreams, listeners) -> None:
+    """Remove the listeners forwarded to a finished replay's clone once
+    the listener bus has delivered the replay's events: delivery is
+    asynchronous, and removing them earlier would drop the last progress
+    and the terminated event."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    _swallow(lambda: bus.waitUntilEmpty(60_000))
+    for listener in listeners:
+        _swallow(lambda: jstreams.removeListener(listener))
 
 
 def _swallow(fn) -> None:
-    """Run ``fn`` ignoring exceptions — only for best-effort cleanup on a
-    path that is already raising the real error."""
+    """Run ``fn`` ignoring exceptions — only for best-effort cleanup whose
+    failure must not mask the real outcome."""
     try:
         fn()
     except Exception:  # noqa: BLE001 — cleanup must not mask the raise

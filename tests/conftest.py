@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import json
 import threading
+import time
 
 import pytest
 from pyspark.sql.streaming import StreamingQueryListener
@@ -56,6 +57,17 @@ class ProgressRecorder(StreamingQueryListener):
     def onQueryTerminated(self, event):
         with self._lock:
             self.terminated.append(str(event.id))
+
+    def wait_terminated(self, n: int, timeout: float = 60.0) -> None:
+        """Block until ``n`` queries have reported termination.  Delivery
+        is asynchronous; a query's terminated event arrives after all of
+        its progress events."""
+        deadline = time.monotonic() + timeout
+        while len(self.terminated) < n:
+            assert time.monotonic() < deadline, (
+                f"{len(self.terminated)} of {n} terminated events arrived"
+            )
+            time.sleep(0.05)
 
 
 @pytest.fixture

@@ -125,6 +125,7 @@ def test_streaming_dedup_output_identical_without_no_data_batch(
         max_files_per_trigger=1,
     )
     rows_off = sorted((r.user_id, r.event_type) for r in out_off.collect())
+    progress.wait_terminated(1)
     n_off = len(progress.progress)
 
     _with_no_data_batch(monkeypatch)
@@ -134,6 +135,7 @@ def test_streaming_dedup_output_identical_without_no_data_batch(
         max_files_per_trigger=1,
     )
     rows_on = sorted((r.user_id, r.event_type) for r in out_on.collect())
+    progress.wait_terminated(2)
     assert _zero_input_triggers(progress.progress[n_off:]) == (
         _zero_input_triggers(progress.progress[:n_off]) + 1
     ), "the forced-ON run did not run the trailing no-data batch"
@@ -175,6 +177,7 @@ def test_inner_event_pairs_output_identical_without_no_data_batch(
         max_files_per_trigger=1,
     )
     rows_off = sorted(tuple(r) for r in off.select(*cols).collect())
+    progress.wait_terminated(1)
     n_off = len(progress.progress)
 
     _with_no_data_batch(monkeypatch)
@@ -184,6 +187,7 @@ def test_inner_event_pairs_output_identical_without_no_data_batch(
         max_files_per_trigger=1,
     )
     rows_on = sorted(tuple(r) for r in on.select(*cols).collect())
+    progress.wait_terminated(2)
     assert _zero_input_triggers(progress.progress[n_off:]) == (
         _zero_input_triggers(progress.progress[:n_off]) + 1
     ), "the forced-ON run did not run the trailing no-data batch"

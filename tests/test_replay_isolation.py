@@ -72,6 +72,7 @@ def test_concurrent_replays_keep_their_pins_to_themselves(spark, sf_dir, tmp_pat
     assert seen == {caller}, f"caller saw {seen}, expected only {caller}"
     # the tumbling replay writes through foreachBatch, the dedup replay
     # into a parquet file sink
+    progress.wait_terminated(4)
     pins = {}
     for d in progress.progress:
         kind = "dedup" if d["sink"]["description"].startswith("FileSink") else "tumbling"
@@ -98,5 +99,6 @@ def test_hung_replay_is_stopped_and_reported(spark, tmp_path, progress):
             str(tmp_path / "ck"),
             timeout_s=2,
         )
+    progress.wait_terminated(1)
     assert len(progress.started) == 1
     assert progress.terminated == progress.started

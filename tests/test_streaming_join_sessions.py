@@ -74,6 +74,7 @@ def test_stream_stream_join_matches_batch_across_batches(
     cols = ["user_id", "id_a", "id_b", "gap_ms"]
     g, w = set(_norm(got, cols)), set(_norm(want, cols))
     if g != w:
+        progress.wait_terminated(1)
         for d in progress.progress:
             print("PROGRESS", d.get("batchId"), d.get("eventTime", {}), [ (s.get("description","")[:40], s.get("numInputRows")) for s in d.get("sources", []) ], d.get("sink", {}).get("numOutputRows"))
     assert g == w, f"missing={sorted(w - g)} extra={sorted(g - w)}"
@@ -161,6 +162,7 @@ def test_streaming_sessions_append_finalized_and_bounded(
     # bounded state: after the final batch the store holds only sessions
     # the watermark hasn't closed — strictly fewer than the total complete
     # mode would retain (evidence eviction actually happened)
+    progress.wait_terminated(1)
     last = None
     for d in progress.progress:
         ops = d.get("stateOperators") or []
@@ -231,6 +233,7 @@ def test_stream_stream_join_state_is_watermark_bounded(
     )
     assert got.count() > 0  # non-vacuous: the join did real work
     n_events = load_table(spark, sf_dir, "events").count()
+    progress.wait_terminated(1)
     last = None
     for d in progress.progress:
         ops = d.get("stateOperators") or []
