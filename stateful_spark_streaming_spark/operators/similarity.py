@@ -548,7 +548,10 @@ def ivf_topk(
 
     q_rows = queries.select(id_col, vec_col).collect()  # bounded query set
     qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Qraw = np.array([r[1] for r in q_rows], dtype=np.float64)
+    # (nq, dim) even for an empty query set, which then probes no cell
+    Qraw = np.array([r[1] for r in q_rows], dtype=np.float64).reshape(
+        len(q_rows), cents_np.shape[1]
+    )
     # probe cells from raw (un-normalized) query vectors — identical to
     # _assign_probe_cells' euclidean argmin semantics
     d2 = (

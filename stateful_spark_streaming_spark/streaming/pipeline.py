@@ -32,13 +32,16 @@ Two sinks, one contract:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import tempfile
 import threading
 from dataclasses import dataclass, field
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from stateful_spark_streaming_spark.sources.flights import parse_flight_lines
 from stateful_spark_streaming_spark.streaming.track_state import (
@@ -170,8 +173,6 @@ class ParquetSnapshotSink:
         self.batches_seen = 0
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         (
             batch_df.withColumn("_batch_id", F.lit(batch_id))
             .write.mode("append")
@@ -226,7 +227,6 @@ class ParquetSnapshotSink:
         self, keep_batch_id: bool = False, as_of_batch: int | None = None
     ) -> DataFrame | None:
         from pyspark.sql import Window
-        from pyspark.sql import functions as F
 
         df = self._read_log()
         if df is None:
@@ -332,22 +332,11 @@ def compact_partial_log(
     an append log forever and the read path degrades into a
     many-small-files scan (the 100 TB regression SCALE.md warns about).
 
-    Semantics — read-result IDENTICAL before/after, by construction:
-    1. replay dedupe exactly as the read paths do (one row per
-       (keys, batch); replayed appends are byte-identical so ``max`` of
-       each value column is the single true value — or plain DISTINCT
-       when the log carries no batch stamp);
-    2. cross-batch fold per ``keys``: ``sums`` columns are summed (the
-       additive partials), ``mins``/``maxs`` folded respectively — a
-       column whose rows are FINAL per key (e.g. per-doc counts that
-       live in exactly one batch) goes in ``maxs``, where the fold is a
-       no-op collapse of replays;
-    3. the folded row is stamped with the max batch id seen, so the
-       unchanged per-(keys, batch) dedupe on the read path treats the
-       compacted generation exactly like one big committed batch.
-    Every log column must be declared in keys/sums/mins/maxs — an
-    undeclared column is a schema drift and raises instead of being
-    silently dropped.
+    The fold is ``_fold_partials`` — the one every staged runner reads
+    through — so the read result is IDENTICAL before/after by
+    construction: the folded row carries the max batch id seen, and the
+    read's fold treats the compacted generation exactly like one big
+    committed batch.
 
     The swap goes through ``generations``: the folded generation is
     fully written to ``<path>.tmp`` (parquet ``_SUCCESS`` as the commit
@@ -366,8 +355,6 @@ def compact_partial_log(
     in flight or died uncommitted, so compaction REFUSES when the newest
     offsets entry has no matching commit — the double-count window
     above, detected from the same metadata the restart replay uses."""
-    from pyspark.sql import functions as F
-
     from stateful_spark_streaming_spark.generations import (
         recover_generation,
         swap_generation,
@@ -388,45 +375,18 @@ def compact_partial_log(
     if not os.path.exists(path):
         return  # nothing staged yet — zero-batch streams have no log
     df = spark.read.parquet(path)
-    orig_cols = list(df.columns)
-    if kmvs and "_kmv_k" in df.columns:
-        # the writer stamped its sketch width into the log (the strong
-        # form of the ADVICE r12 guard): validate it outright — the
-        # width-measuring fallback below can NOT catch a narrowing fold
-        # when every per-batch sketch is individually under the wrong k
-        # but their union exceeds it (review r13)
-        # NULL stamps are LEGACY rows (ADVICE r13): a log that mixes
-        # pre-stamp and stamped batches — exactly what resuming an
-        # existing stream under the stamping writer produces — must not
-        # fail the mismatch check on the NULLs; the unstamped rows fall
-        # back to the width heuristic below, like a fully stampless log
-        ks = {
-            r[0]
-            for r in df.select("_kmv_k").distinct().collect()
-            if r[0] is not None
-        }
-        if ks and ks != {int(kmv_k)}:
-            raise ValueError(
-                f"partial log at {path} is stamped _kmv_k={sorted(ks)} but "
-                f"this compaction uses kmv_k={kmv_k} — a mismatched fold "
-                "narrows/widens the sketch and corrupts read-path "
-                "estimates.  Compact with "
-                "distinct_kmv_compaction_spec(k=<writer's k>)."
-            )
-        # constant per log — carry it through the fold unchanged (max
-        # ignores NULLs, so a mixed group folds to the stamped k)
-        maxs = (*maxs, "_kmv_k")
-        has_legacy = bool(
-            df.filter(F.col("_kmv_k").isNull()).limit(1).count()
-        )
-    else:
-        has_legacy = bool(kmvs)
-    if kmvs and has_legacy:
+    folded = _fold_partials(
+        df, path, keys, sums, mins, maxs, hlls, kmvs, kmv_k, batch_col
+    )
+    if kmvs and (
+        "_kmv_k" not in df.columns
+        or df.filter(F.col("_kmv_k").isNull()).limit(1).count()
+    ):
         # stampless (pre-r13) rows — a fully legacy log, or the legacy
         # batches of a mixed one: measure the staged width — catches a
         # log written with k > kmv_k whenever any batch saw ≥ kmv_k
         # distincts, but NOT the all-batches-narrow union case; the
-        # stamped path above is the complete guard for stamped rows
+        # stamp check in the fold is the complete guard for stamped rows
         widest = df.select(
             *[F.max(F.size(F.col(c))).alias(c) for c in kmvs]
         ).first()
@@ -439,54 +399,183 @@ def compact_partial_log(
                     "read-path estimates.  Compact with "
                     "distinct_kmv_compaction_spec(k=<writer's k>)."
                 )
-    value_cols = [*sums, *mins, *maxs, *hlls, *kmvs]
-    declared = set(keys) | set(value_cols) | ({batch_col} if batch_col else set())
-    if set(orig_cols) != declared:
-        raise ValueError(
-            f"partial log at {path} has columns {sorted(df.columns)}, "
-            f"declared {sorted(declared)} — refusing to drop data silently"
-        )
-    if batch_col is None:
-        folded = df.distinct()
-    else:
-        # identity-only logs (no value columns): the per-(keys, batch)
-        # dedupe degenerates to DISTINCT and the fold keeps the max stamp
-        per_batch = (
-            df.distinct()
-            if not value_cols
-            else df.groupBy(*keys, batch_col).agg(
-                *[F.max(c).alias(c) for c in value_cols]
-            )
-        )
-        folded = per_batch.groupBy(*keys).agg(
-            *[F.sum(c).alias(c) for c in sums],
-            *[F.min(c).alias(c) for c in mins],
-            *[F.max(c).alias(c) for c in maxs],
-            # DataSketches HLL binaries fold by union (register-wise max
-            # — idempotent, so this is also safe on replayed rows)
-            *[F.hll_union_agg(c, F.lit(False)).alias(c) for c in hlls],
-            # KMV bottom-k hash arrays fold by set-union + re-bottom-k
-            # (idempotent; kmv_k MUST match the writing runner's k).
-            # Bounded per key by n_batches * k longs inside one agg row.
-            *[
-                F.slice(
-                    F.array_sort(
-                        F.array_distinct(F.flatten(F.collect_list(c)))
-                    ),
-                    1,
-                    kmv_k,
-                ).alias(c)
-                for c in kmvs
-            ],
-            F.max(batch_col).alias(batch_col),
-        )
-    folded.select(*orig_cols).write.mode("overwrite").parquet(path + ".tmp")
+    folded.write.mode("overwrite").parquet(path + ".tmp")
     swap_generation(path)
 
 
+def _fold_partials(
+    df: DataFrame,
+    path: str,
+    keys: list[str] | tuple[str, ...],
+    sums: tuple[str, ...] = (),
+    mins: tuple[str, ...] = (),
+    maxs: tuple[str, ...] = (),
+    hlls: tuple[str, ...] = (),
+    kmvs: tuple[str, ...] = (),
+    kmv_k: int = 256,
+    batch_col: str | None = "_batch_id",
+) -> DataFrame:
+    """THE fold of a staged partial log (the ``compact_partial_log``
+    keywords): compaction writes it back, every staged runner reads
+    through it.
+    1. replay dedupe: a crash between a ``foreachBatch`` append and its
+       checkpoint commit re-runs the batch under the SAME id and
+       re-appends byte-identical rows, so additive ``sums`` first
+       collapse to one row per (keys, batch) — ``max`` of each value
+       column is the single true value.  The other fold classes are
+       idempotent and absorb replays themselves; a log without a batch
+       stamp holds identity rows, and DISTINCT is its whole fold;
+    2. cross-batch fold per ``keys``: ``sums`` summed (the additive
+       partials), ``mins``/``maxs`` folded respectively — a column whose
+       rows are FINAL per key (e.g. per-doc counts that live in exactly
+       one batch) goes in ``maxs``, where the fold only collapses
+       replays; ``hlls`` (DataSketches binaries) by union; ``kmvs``
+       (bottom-k hash arrays) by set-union + re-bottom-k under
+       ``kmv_k``, which MUST be the writing runner's k;
+    3. the folded row carries the max batch id seen.
+    Every log column must be declared — an undeclared column is a schema
+    drift and raises instead of being silently dropped — and a KMV log's
+    ``_kmv_k`` stamp must equal ``kmv_k``.  Columns keep the log's
+    order."""
+    cols = list(df.columns)
+    if kmvs and "_kmv_k" in cols:
+        # the writer stamped its sketch width into the log: bottom-k of a
+        # union of bottom-k' sketches is the global bottom-k only when
+        # k <= k', and the m < k exact-count branch is wrong either way.
+        # NULL stamps are LEGACY rows (a resumed stream's pre-stamp
+        # batches) and carry no width claim to check
+        ks = {
+            r[0]
+            for r in df.select("_kmv_k").distinct().collect()
+            if r[0] is not None
+        }
+        if ks and ks != {int(kmv_k)}:
+            raise ValueError(
+                f"partial log at {path} was written with k={sorted(ks)} (its "
+                f"_kmv_k stamp) but this fold uses kmv_k={kmv_k} — a "
+                "mismatched fold silently corrupts the estimator.  Use "
+                "distinct_kmv_compaction_spec(k=<writer's k>)."
+            )
+        # constant per log — max ignores the legacy NULLs
+        maxs = (*maxs, "_kmv_k")
+    values = [*sums, *mins, *maxs, *hlls, *kmvs]
+    declared = {*keys, *values, *([batch_col] if batch_col else [])}
+    if set(cols) != declared:
+        raise ValueError(
+            f"partial log at {path} has columns {sorted(cols)}, "
+            f"declared {sorted(declared)} — refusing to drop data silently"
+        )
+    if batch_col is None:
+        return df.distinct()
+    if sums:
+        df = df.groupBy(*keys, batch_col).agg(*[F.max(c).alias(c) for c in values])
+    return df.groupBy(*keys).agg(
+        *[F.sum(c).alias(c) for c in sums],
+        *[F.min(c).alias(c) for c in mins],
+        *[F.max(c).alias(c) for c in maxs],
+        # register-wise max — idempotent, so also safe on replayed rows
+        *[F.hll_union_agg(c, F.lit(False)).alias(c) for c in hlls],
+        # bounded per key by n_batches * k longs inside one agg row
+        *[
+            F.slice(
+                F.array_sort(F.array_distinct(F.flatten(F.collect_list(c)))),
+                1,
+                kmv_k,
+            ).alias(c)
+            for c in kmvs
+        ],
+        F.max(batch_col).alias(batch_col),
+    ).select(*cols)
+
+
+def _nullable(t):
+    """``t`` with every field and array element nullable — the type a
+    parquet read gives the same columns."""
+    from pyspark.sql.types import ArrayType, StructField, StructType
+
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    return t
+
+
+class _StagedLog(NamedTuple):
+    """One batch-stamped partial log of a ``foreachBatch`` ingest runner:
+    its dir, its fold spec (the ``compact_partial_log`` keywords — the
+    dict compaction uses for this log, so the read and the compaction
+    cannot disagree) and the per-batch partial it appends, laid out for
+    the write (``coalesce``/``repartition``)."""
+
+    path: str
+    spec: dict
+    partial: Callable[[DataFrame], DataFrame]
+
+    def _stamped(self, bdf: DataFrame, batch_id: int) -> DataFrame:
+        part = self.partial(bdf)
+        if self.spec.get("batch_col", "_batch_id") is not None:
+            part = part.withColumn("_batch_id", F.lit(batch_id))
+        if self.spec.get("kmvs"):
+            # the sketch width goes INTO the log: the width heuristic alone
+            # can't catch a narrowing fold when every per-batch sketch is
+            # under the wrong k but their UNION exceeds it (review r13)
+            part = part.withColumn("_kmv_k", F.lit(int(self.spec["kmv_k"])))
+        return part
+
+    def append(self, bdf: DataFrame, batch_id: int) -> None:
+        """``foreachBatch`` sink: append the batch's partial stamped with
+        its batch id — a replayed batch re-appends byte-identical rows
+        under the same id, which the fold collapses."""
+        self._stamped(bdf, batch_id).write.mode("append").parquet(self.path)
+
+    def read(self, spark: SparkSession, source: str, shape=None) -> DataFrame:
+        """The folded log without its stamps.  A log no batch appended to
+        (zero micro-batches, e.g. a restart on a caught-up checkpoint)
+        folds the partial of an empty batch of ``source`` (``shape`` maps
+        source rows to the sink's input), typed as the parquet read
+        would type it — no hand-kept schema to drift."""
+        if os.path.exists(self.path):
+            df = spark.read.parquet(self.path)
+        else:
+            empty = spark.read.parquet(source).limit(0)
+            part = self._stamped(shape(empty) if shape else empty, 0)
+            df = spark.createDataFrame([], _nullable(part.schema))
+        return _fold_partials(df, self.path, **self.spec).drop("_batch_id", "_kmv_k")
+
+
+def distinct_kmv_compaction_spec(k: int = 256, key: str = "event_type") -> dict:
+    """Compaction spec for a ``run_streaming_distinct_kmv`` staged log
+    written with a non-default ``k`` or key column (the static
+    ``STAGED_SINK_COMPACTION['distinct_kmv']`` entry holds the
+    defaults; folding with the wrong k silently changes the sketch the
+    read path sees — the ``_kmv_k`` stamp makes that fold refuse)."""
+    return dict(keys=[key], sums=("n_rows",), kmvs=("hs",), kmv_k=k)
+
+
+def quality_hist_compaction_spec(group_col: str = "source") -> dict:
+    """Compaction spec for a ``run_streaming_quality_histogram`` staged
+    log written with a non-default ``group_col`` (the static
+    ``STAGED_SINK_COMPACTION['quality_hist']`` entry holds the
+    default)."""
+    return dict(keys=[group_col, "bin"], sums=("n",))
+
+
+def _distinct_sketch_spec(key: str = "event_type") -> dict:
+    # HLL binaries fold by union; the row count is the additive half
+    return dict(keys=[key], sums=("n_rows",), hlls=("sk",))
+
+
+def _source_counts_spec(group_col: str = "source") -> dict:
+    return dict(keys=[group_col, "token"], sums=("c",))
+
+
 #: per-sink compaction parameter sets — the declared identity/fold class
-#: of every column each staged sink appends.  ``<ckpt>`` is the
-#: checkpoint_dir the run_streaming_* call used; pytest drives each spec
+#: of every column each staged sink appends, and the fold its runner
+#: reads through.  ``<ckpt>`` is the checkpoint_dir the run_streaming_*
+#: call used; parametrized runners build their spec from their own
+#: arguments (the entries hold the defaults).  pytest drives each spec
 #: and asserts byte-identical read results + a file-count drop.
 STAGED_SINK_COMPACTION = {
     # run_streaming_vocab: <ckpt>_partials
@@ -506,18 +595,12 @@ STAGED_SINK_COMPACTION = {
     # run_streaming_dedup_minhash: <ckpt>_out (no batch stamp — admitted
     # ids only; replay dedupe IS the whole fold)
     "minhash_admitted": dict(keys=["doc_id"], batch_col=None),
-    # run_streaming_distinct_stats: <ckpt>_sketches (HLL binaries fold by
-    # union; the row count is the additive half)
-    "distinct_sketch": dict(keys=["event_type"], sums=("n_rows",), hlls=("sk",)),
-    # run_streaming_distinct_kmv: <ckpt>_sketches (bottom-k hash arrays
-    # fold by set-union + re-bottom-k).  NOTE: assumes the runner's
-    # DEFAULT k=256 — a log written with another k must use
-    # distinct_kmv_compaction_spec(k).  Since r13 the writer stamps its k
-    # into the log (`_kmv_k`), so a mismatched fold or read FAILS LOUDLY
-    # instead of silently re-widthing the sketch.
-    "distinct_kmv": dict(
-        keys=["event_type"], sums=("n_rows",), kmvs=("hs",), kmv_k=256
-    ),
+    # run_streaming_distinct_stats: <ckpt>_sketches (key=)
+    "distinct_sketch": _distinct_sketch_spec(),
+    # run_streaming_distinct_kmv: <ckpt>_sketches (key=, k=; the writer
+    # stamps its k into the log as `_kmv_k`, so a fold or read under
+    # another k FAILS LOUDLY instead of silently re-widthing the sketch)
+    "distinct_kmv": distinct_kmv_compaction_spec(),
     # run_streaming_image_keep_best: <ckpt>_partials (n additive; the
     # lexicographic best = struct(gq, neg) folds by plain struct max) and
     # <ckpt>_nullids (per-id identity rows — no batch stamp, replay
@@ -525,36 +608,16 @@ STAGED_SINK_COMPACTION = {
     "image_kb_partials": dict(keys=["bits"], sums=("n",), maxs=("best",)),
     "image_kb_nullids": dict(keys=["image_id"], batch_col=None),
     # run_streaming_heavy_hitters: <ckpt>_counters (CMS counters are
-    # additive) and <ckpt>_cands (identity rows, replay-deduped on read)
+    # additive) and <ckpt>_cands (identity rows)
     "cms_counters": dict(keys=["r", "b"], sums=("n",)),
     "cms_candidates": dict(keys=["token"]),
     # run_streaming_quality_histogram: <ckpt>_hist (bin counts are
-    # additive).  NOTE: this spec assumes the DEFAULT group_col="source";
-    # a log written with a different group column must compact with
-    # quality_hist_compaction_spec(group_col) instead — compacting it
-    # under this spec would group on a nonexistent (or wrong) column.
-    "quality_hist": dict(keys=["source", "bin"], sums=("n",)),
+    # additive; group_col=)
+    "quality_hist": quality_hist_compaction_spec(),
     # run_streaming_source_drift: <ckpt>_counts (token counts are
-    # additive).  Same default-group_col caveat as quality_hist.
-    "source_token_counts": dict(keys=["source", "token"], sums=("c",)),
+    # additive; group_col=)
+    "source_token_counts": _source_counts_spec(),
 }
-
-
-def distinct_kmv_compaction_spec(k: int = 256, key: str = "event_type") -> dict:
-    """Compaction spec for a ``run_streaming_distinct_kmv`` staged log
-    written with a non-default ``k`` or key column (the static
-    ``STAGED_SINK_COMPACTION['distinct_kmv']`` entry hardcodes the
-    defaults; folding with the wrong k silently changes the sketch the
-    read path sees)."""
-    return dict(keys=[key], sums=("n_rows",), kmvs=("hs",), kmv_k=k)
-
-
-def quality_hist_compaction_spec(group_col: str = "source") -> dict:
-    """Compaction spec for a ``run_streaming_quality_histogram`` staged
-    log written with a non-default ``group_col`` (the static
-    ``STAGED_SINK_COMPACTION['quality_hist']`` entry hardcodes the
-    default)."""
-    return dict(keys=[group_col, "bin"], sums=("n",))
 
 
 @dataclass
@@ -623,7 +686,6 @@ def flight_socket_pipeline(
     storage-backed upsert log next to the checkpoint, so it survives
     restarts and driver memory stays O(1); ``sink_kind='driver'`` is the
     reference's driver-sized show()-oriented view."""
-    from pyspark.sql import functions as F
 
     # arrival tiebreak for equal-ts dedup: streaming sources expose no row
     # order (and monotonically_increasing_id is not allowed on streams), so
@@ -815,7 +877,6 @@ def run_snapshot_query(
     trigger, so size it to key volume: a handful of partitions for
     thousands of keys (measured 3× faster than 32 partitions for 1.5k
     keys), the session default for production key counts."""
-    from pyspark.sql import functions as F
 
     cfg = cfg or TrackStateConfig()
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_")
@@ -842,10 +903,15 @@ def _stage_parquet_stream(
     merge_schema: bool = False,
 ) -> DataFrame:
     """Open a parquet path as a file-source STREAM: read the footer schema
-    (file sources need an explicit one), symlink a single file into a temp
-    dir (file sources need a directory), and apply the per-trigger file
-    cap.  One definition for every streaming entry point — a staging fix
-    (schema drift, deleted source) lands once.
+    (file sources need an explicit one), symlink a single file into a
+    staging dir (file sources need a directory), and apply the per-trigger
+    file cap.  One definition for every streaming entry point — a staging
+    fix (schema drift, deleted source) lands once.
+
+    The staging dir is keyed by the file's absolute path, so every run
+    over one file lists the SAME dir: the checkpoint's source log names
+    the files it has seen by path, and a restart from a different dir
+    fails (``Wrong basePath``) instead of resuming.
 
     ``merge_schema=True`` (the schema-evolution feed): the stream schema
     is the UNION of every existing file's footer, so a feed whose later
@@ -858,8 +924,16 @@ def _stage_parquet_stream(
     raw_schema = raw_read.parquet(path).schema
     src_dir = path
     if os.path.isfile(path):
-        src_dir = tempfile.mkdtemp(prefix="sss_stream_src_")
-        os.symlink(os.path.abspath(path), os.path.join(src_dir, "part-0.parquet"))
+        target = os.path.abspath(path)
+        src_dir = os.path.join(
+            tempfile.gettempdir(),
+            "sss_stream_src_" + hashlib.md5(target.encode()).hexdigest(),
+        )
+        os.makedirs(src_dir, exist_ok=True)
+        try:
+            os.symlink(target, os.path.join(src_dir, "part-0.parquet"))
+        except FileExistsError:
+            pass  # staged by an earlier (or a concurrent) run
     reader = spark.readStream.schema(raw_schema).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -883,7 +957,6 @@ def stream_events_source(
     nanos timestamp handling, single-file symlink into a source directory.
     ``max_files_per_trigger`` splits a multi-file replay into micro-batches
     (availableNow honors it)."""
-    from pyspark.sql import functions as F
 
     # Like _load_events, normalize every way the nanos column can surface
     # (bigint / timestamp_ntz / timestamp) to a real UTC instant.
@@ -992,8 +1065,6 @@ class CompleteSnapshotSink(ParquetSnapshotSink):
     def _merged(
         self, keep_batch_id: bool = False, as_of_batch: int | None = None
     ):
-        from pyspark.sql import functions as F
-
         df = self._read_log()
         if df is None:
             return None
@@ -1173,7 +1244,6 @@ def run_streaming_dedup_minhash(
     distinct-band cardinality outgrows executor memory.
 
     Returns the admitted documents' ids (column ``doc_id``)."""
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import (
         ArrayType,
@@ -1188,7 +1258,19 @@ def run_streaming_dedup_minhash(
     )
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_mhdedup_")
-    out_dir = checkpoint_dir + "_out"
+    # a doc's 8 flags reduce batch-locally (its band rows never split
+    # across batches); the admitted ids are identity rows, each in exactly
+    # one batch, so distinct-on-read restores exactly-once.  The id list
+    # is tiny relative to the corpus — don't spray 32 near-empty files
+    admitted = _StagedLog(
+        checkpoint_dir + "_out",
+        STAGED_SINK_COMPACTION["minhash_admitted"],
+        lambda bdf: bdf.groupBy("doc_id")
+        .agg(F.max(F.col("is_dup").cast("int")).alias("_d"))
+        .filter(F.col("_d") == 0)
+        .select("doc_id")
+        .coalesce(4),
+    )
     parallelism = spark.sparkContext.defaultParallelism
     if state_partitions is None:
         # match core count, NOT the session's shuffle setting: a plain
@@ -1246,35 +1328,16 @@ def run_streaming_dedup_minhash(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        return flagged.writeStream.foreachBatch(_admit).outputMode("update")
-
-    def _admit(bdf: DataFrame, batch_id: int) -> None:
-        (
-            bdf.groupBy("doc_id")
-            .agg(F.max(F.col("is_dup").cast("int")).alias("_d"))
-            .filter(F.col("_d") == 0)
-            .select("doc_id")
-            # id list is tiny relative to the corpus — don't spray 32
-            # near-empty files per batch
-            .coalesce(4)
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        return flagged.writeStream.foreachBatch(admitted.append).outputMode("update")
 
     replay(spark, build, checkpoint_dir, confs=confs)
-    if not os.path.exists(out_dir):
-        # zero micro-batches ever fired (e.g. empty source dir):
-        # nothing was appended — return a typed empty frame, not a
-        # PATH_NOT_FOUND crash (same guard as run_streaming_ivf_topk)
-        id_type = spark.read.parquet(documents_path).schema[id_col].dataType
-        return spark.createDataFrame(
-            [], StructType([StructField("doc_id", id_type)])
-        )
-    # distinct-on-read = replay idempotency: a crash between the
-    # foreachBatch append and the checkpoint commit re-appends the
-    # SAME byte-identical rows (each admitted doc belongs to exactly
-    # one batch), so distinct restores exactly-once
-    return spark.read.parquet(out_dir).distinct()
+    return admitted.read(
+        spark,
+        documents_path,
+        lambda src: src.select(
+            F.col(id_col).alias("doc_id"), F.lit(False).alias("is_dup")
+        ),
+    )
 
 
 def run_streaming_decontaminate(
@@ -1302,14 +1365,15 @@ def run_streaming_decontaminate(
     is batch-local and exact.  Emits each contaminated doc id once
     (within a batch; across batches a doc appears in one file batch
     only).  Returns the contaminated ids (column ``doc_id``)."""
-    from pyspark.sql import functions as F
 
     from stateful_spark_streaming_spark.operators.text import shingles
 
     from stateful_spark_streaming_spark.operators.dedup import _shingle_index
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_decon_")
-    out_dir = checkpoint_dir + "_out"
+    flagged = _StagedLog(
+        checkpoint_dir + "_out", dict(keys=["doc_id"], batch_col=None), DataFrame.distinct
+    )
     ev_shingles = (
         eval_df.select(F.explode(shingles(F.col(text_col), k)).alias("shingle"))
         .distinct()
@@ -1328,22 +1392,13 @@ def run_streaming_decontaminate(
             .select(F.col("doc").alias("doc_id"), "shingle")
             .join(F.broadcast(ev_shingles), "shingle", "left_semi")
             .select("doc_id")
-            .writeStream.foreachBatch(_sink)
+            .writeStream.foreachBatch(flagged.append)
         )
 
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
-        bdf.distinct().write.mode("append").parquet(out_dir)
-
     replay(spark, build, checkpoint_dir)
-    if not os.path.exists(out_dir):
-        # zero micro-batches (empty source / filter matched nothing):
-        # typed empty result, not a PATH_NOT_FOUND crash
-        from pyspark.sql.types import StructField, StructType
-
-        id_type = spark.read.parquet(documents_path).schema[id_col].dataType
-        return spark.createDataFrame([], StructType([StructField("doc_id", id_type)]))
-    # distinct-on-read = replay idempotency (see run_streaming_dedup_minhash)
-    return spark.read.parquet(out_dir).distinct()
+    return flagged.read(
+        spark, documents_path, lambda src: src.select(F.col(id_col).alias("doc_id"))
+    )
 
 
 def run_streaming_vocab(
@@ -1375,58 +1430,28 @@ def run_streaming_vocab(
     The top-N + rank is computed over the merged vocabulary exactly as the
     batch operator does (TakeOrderedAndProject + rank window over N rows).
     """
-    from pyspark.sql import functions as F
 
-    from stateful_spark_streaming_spark.operators.text import _token_occurrences
+    from stateful_spark_streaming_spark.operators.text import (
+        _token_occurrences,
+        vocab_rank,
+    )
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_vocab_")
-    out_dir = checkpoint_dir + "_partials"
-
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
-        part = (
-            _token_occurrences(bdf, text_col, id_col)
-            .groupBy("token", "doc_id")
-            .agg(F.count("*").alias("c"))
-            .groupBy("token")
-            .agg(F.sum("c").alias("term_count"), F.count("*").alias("doc_freq"))
-        )
-        # batch-id stamp makes the append REPLAY-IDEMPOTENT: a crash
-        # between this append and the checkpoint commit re-runs the batch
-        # with the SAME id and re-appends byte-identical rows, and the
-        # merge below collapses per (token, batch) before summing — a
-        # plain sum over raw appends would double-count the replay
-        part.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
-
-    from stateful_spark_streaming_spark.operators.text import vocab_rank
-
-    if not os.path.exists(out_dir):
-        # zero micro-batches: empty vocabulary in the final shape, not a
-        # PATH_NOT_FOUND crash
-        return vocab_rank(
-            spark.createDataFrame(
-                [], "token string, term_count bigint, doc_freq bigint"
-            ),
-            top_n,
-        )
-
-    merged = (
-        spark.read.parquet(out_dir)
-        # replay dedupe: one row per (token, batch) — replayed appends are
-        # byte-identical (the partial agg is deterministic), so max == the
-        # single true value; then the cross-batch sum
-        .groupBy("token", "_batch_id")
-        .agg(
-            F.max("term_count").alias("term_count"),
-            F.max("doc_freq").alias("doc_freq"),
-        )
+    partials = _StagedLog(
+        checkpoint_dir + "_partials",
+        STAGED_SINK_COMPACTION["vocab"],
+        lambda bdf: _token_occurrences(bdf, text_col, id_col)
+        .groupBy("token", "doc_id")
+        .agg(F.count("*").alias("c"))
         .groupBy("token")
-        .agg(F.sum("term_count").alias("term_count"), F.sum("doc_freq").alias("doc_freq"))
+        .agg(F.sum("c").alias("term_count"), F.count("*").alias("doc_freq")),
     )
-    return vocab_rank(merged, top_n)
+    replay(
+        spark,
+        _parquet_batches(documents_path, max_files_per_trigger, partials.append),
+        checkpoint_dir,
+    )
+    return vocab_rank(partials.read(spark, documents_path), top_n)
 
 
 def run_streaming_lm_logprob(
@@ -1458,9 +1483,8 @@ def run_streaming_lm_logprob(
 
     Replay idempotency: appends are batch-stamped; a replayed batch
     re-appends byte-identical rows (the per-doc count aggregate is
-    deterministic and a doc belongs to exactly one batch), so
-    distinct-on-read over the count keys restores exactly-once."""
-    from pyspark.sql import functions as F
+    deterministic and a doc belongs to exactly one batch), so the
+    max-of-replays fold over the count keys restores exactly-once."""
 
     from stateful_spark_streaming_spark.operators.text import (
         _token_occurrences,
@@ -1474,44 +1498,32 @@ def run_streaming_lm_logprob(
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(
         prefix=f"sss_ckpt_lm{order}_"
     )
-    out_dir = checkpoint_dir + "_counts"
-    keys = ["doc_id", "token"] if order == 1 else ["doc_id", "w1", "w2"]
-    score = unigram_score_from_counts if order == 1 else bigram_score_from_counts
 
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
-        if order == 1:
+    def counts(bdf: DataFrame) -> DataFrame:
+        if order == 2:
+            part = bigram_occurrence_counts(bdf, text_col, id_col)
+        else:
             part = (
                 _token_occurrences(bdf, text_col, id_col)
                 .groupBy("doc_id", "token")
                 .agg(F.count("*").alias("c"))
             )
-        else:
-            part = bigram_occurrence_counts(bdf, text_col, id_col)
         # REPARTITION, not coalesce (see run_streaming_dup_spans): keep
         # the tokenize/expand stage wide, move only compact count rows
-        part.withColumn("_batch_id", F.lit(batch_id)).repartition(4).write.mode(
-            "append"
-        ).parquet(out_dir)
+        return part.repartition(4)
 
-    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
-
-    if not os.path.exists(out_dir):
-        # zero micro-batches: empty scores through the SAME scoring tail
-        # over a typed empty count frame — schema derived, not hand-kept
-        from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-        fields = [StructField("doc_id", spark.read.parquet(documents_path).schema[id_col].dataType)]
-        fields += [StructField(c, StringType()) for c in keys[1:]]
-        fields += [StructField("c", LongType())]
-        return score(spark.createDataFrame([], StructType(fields)))
-    per = (
-        spark.read.parquet(out_dir)
-        .drop("_batch_id")
-        # replay dedupe: a count row exists once per (doc, gram) in the
-        # true stream; duplicates can only be replayed appends
-        .dropDuplicates(keys)
+    log = _StagedLog(
+        checkpoint_dir + "_counts",
+        STAGED_SINK_COMPACTION["lm_unigram" if order == 1 else "lm_bigram"],
+        counts,
     )
-    return score(per)
+    replay(
+        spark,
+        _parquet_batches(documents_path, max_files_per_trigger, log.append),
+        checkpoint_dir,
+    )
+    score = unigram_score_from_counts if order == 1 else bigram_score_from_counts
+    return score(log.read(spark, documents_path))
 
 
 def run_streaming_distinct_stats(
@@ -1540,56 +1552,27 @@ def run_streaming_distinct_stats(
     (key, batch) dedupe on read restores exactly-once — and even a
     missed duplicate would be absorbed by union idempotency for the
     sketch (only the additive row count strictly needs the dedupe)."""
-    from pyspark.sql import functions as F
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_hll_")
-    out_dir = checkpoint_dir + "_sketches"
-
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
-        (
-            bdf.groupBy(key)
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.hll_sketch_agg(count_col, F.lit(lg_k)).alias("sk"),
-            )
-            .withColumn("_batch_id", F.lit(batch_id))
-            .coalesce(1)  # partials are key-cardinality tiny
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
-    replay(spark, _parquet_batches(events_path, max_files_per_trigger, _sink), checkpoint_dir)
-
-    if not os.path.exists(out_dir):
-        from pyspark.sql.types import (
-            BinaryType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        staged = spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField(key, spark.read.parquet(events_path).schema[key].dataType),
-                    StructField("n_rows", LongType()),
-                    StructField("sk", BinaryType()),
-                    StructField("_batch_id", LongType()),
-                ]
-            ),
-        )
-    else:
-        staged = spark.read.parquet(out_dir)
-    return (
-        staged.dropDuplicates([key, "_batch_id"])
-        .groupBy(key)
+    sketches = _StagedLog(
+        checkpoint_dir + "_sketches",
+        _distinct_sketch_spec(key),
+        lambda bdf: bdf.groupBy(key)
         .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.hll_sketch_estimate(F.hll_union_agg("sk", F.lit(False)))
-            .cast("long")
-            .alias("approx_distinct"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.hll_sketch_agg(count_col, F.lit(lg_k)).alias("sk"),
         )
+        .coalesce(1),  # partials are key-cardinality tiny
+    )
+    replay(
+        spark,
+        _parquet_batches(events_path, max_files_per_trigger, sketches.append),
+        checkpoint_dir,
+    )
+    return sketches.read(spark, events_path).select(
+        key,
+        "n_rows",
+        F.hll_sketch_estimate("sk").cast("long").alias("approx_distinct"),
     )
 
 
@@ -1611,9 +1594,10 @@ def run_streaming_distinct_kmv(
     ARRAY) partial — state per key is bounded by k longs regardless of
     batch size because the bottom-k is computed by the shared
     ``kmv_bottom_hashes`` two-level window, never a collect of the full
-    distinct set.  The read side dedupes replays per (key, batch),
-    explodes the arrays, re-runs distinct + bottom-k over the union, and
-    finalizes with the SAME estimator as the batch operator: bottom-k of
+    distinct set.  The read side folds the log (replay dedupe per
+    (key, batch), then bottom-k of the union of the arrays), explodes
+    the result and finalizes with the SAME estimator as the batch
+    operator: bottom-k of
     a union of per-batch bottom-ks equals the global bottom-k (any
     globally-kept hash arrived in some batch and survived that batch's
     bottom-k), so streaming ≡ batch EXACTLY — equality, not tolerance.
@@ -1622,94 +1606,42 @@ def run_streaming_distinct_kmv(
     the (key, batch) dedupe restores exactly-once — and even a missed
     duplicate would be absorbed by set-union idempotency for the sketch
     (only the additive row count strictly needs the dedupe)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from stateful_spark_streaming_spark.operators.relational import (
         kmv_bottom_hashes,
         kmv_finalize,
     )
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_kmv_")
-    out_dir = checkpoint_dir + "_sketches"
 
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
+    def partial(bdf: DataFrame) -> DataFrame:
         counts = bdf.groupBy(key).agg(F.count(F.lit(1)).alias("n_rows"))
         bottom = (
             kmv_bottom_hashes(bdf, key, count_col, k=k)
             .groupBy(key)
             .agg(F.array_sort(F.collect_list("h")).alias("hs"))
         )
-        (
+        return (
             counts.join(bottom, key, "left")
-            .withColumn("_batch_id", F.lit(batch_id))
-            # stamp the sketch width INTO the log: a fold or read under a
-            # different k narrows/widens the sketch silently (the width
-            # heuristic alone can't catch a narrowing fold when every
-            # per-batch sketch happens to be under the wrong k — their
-            # UNION can still exceed it; review r13)
-            .withColumn("_kmv_k", F.lit(int(k)))
             .coalesce(1)  # partials are key-cardinality tiny
-            .write.mode("append")
-            .parquet(out_dir)
         )
 
-    replay(spark, _parquet_batches(events_path, max_files_per_trigger, _sink), checkpoint_dir)
-
-    if not os.path.exists(out_dir):
-        from pyspark.sql.types import (
-            ArrayType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        staged = spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField(key, spark.read.parquet(events_path).schema[key].dataType),
-                    StructField("n_rows", LongType()),
-                    StructField("hs", ArrayType(LongType())),
-                    StructField("_batch_id", LongType()),
-                ]
-            ),
-        )
-    else:
-        staged = spark.read.parquet(out_dir)
-    if "_kmv_k" in staged.columns:
-        # refuse to read a log written under a different k: bottom-k of a
-        # union of bottom-k' sketches is only the global bottom-k when
-        # k <= k', and the m < k exact-count branch is wrong either way.
-        # NULL stamps are LEGACY rows (ADVICE r13) — a resumed stream's
-        # pre-stamp batches — and must not fail the check; they carry no
-        # width claim to validate (the writer-k heuristic for them is the
-        # compaction path's width measurement)
-        ks = {
-            r[0]
-            for r in staged.select("_kmv_k").distinct().collect()
-            if r[0] is not None
-        }
-        if ks and ks != {int(k)}:
-            raise ValueError(
-                f"staged KMV log {out_dir} was written with k={sorted(ks)}, "
-                f"but this read uses k={k} — re-read with the writer's k "
-                "(mixing widths silently corrupts the estimator)"
-            )
-        staged = staged.drop("_kmv_k")
-    staged = staged.dropDuplicates([key, "_batch_id"])
-    counts = staged.groupBy(key).agg(F.sum("n_rows").alias("n_rows"))
-    merged = (
-        staged.select(key, F.explode("hs").alias("h"))
-        .distinct()
+    # the log stamps the sketch width (`_kmv_k`) next to the batch id
+    sketches = _StagedLog(
+        checkpoint_dir + "_sketches", distinct_kmv_compaction_spec(k, key), partial
     )
-    w = Window.partitionBy(key).orderBy(F.col("h").asc())
-    bottom = (
-        merged.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
-        .drop("__rk")
+    replay(
+        spark,
+        _parquet_batches(events_path, max_files_per_trigger, sketches.append),
+        checkpoint_dir,
     )
-    return kmv_finalize(bottom, counts, key, k)
+    # the kmvs fold IS the cross-batch bottom-k; finalize over its rows
+    staged = sketches.read(spark, events_path)
+    return kmv_finalize(
+        staged.select(key, F.explode("hs").alias("h")),
+        staged.select(key, "n_rows"),
+        key,
+        k,
+    )
 
 
 def run_streaming_image_keep_best(
@@ -1755,7 +1687,6 @@ def run_streaming_image_keep_best(
     an ingest pipeline should STOP there (raise, with the widen-the-
     hash escape in the message), not publish fiction.  Pass ``None``
     to opt out explicitly (audit/probe runs)."""
-    from pyspark.sql import functions as F
 
     from stateful_spark_streaming_spark.operators import multimodal as MM
     from stateful_spark_streaming_spark.operators.dedup import (
@@ -1763,11 +1694,9 @@ def run_streaming_image_keep_best(
     )
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_imgkb_")
-    out_dir = checkpoint_dir + "_partials"
-    null_dir = checkpoint_dir + "_nullids"
     nbits = grid * grid
 
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
+    def decode(bdf: DataFrame) -> DataFrame:
         # coalesce NULL quality (NULL width/height) to -1 — the batch
         # operator's missing-quality rank.  Without it a hash group whose
         # members ALL have NULL quality gets gq NULL, the achiever filter
@@ -1779,11 +1708,11 @@ def run_streaming_image_keep_best(
             ).cast("long"),
             F.lit(-1).cast("long"),
         )
-        # pin the decoded batch: grp, gbest, and the null tail all read it,
-        # and its upstream is the per-image decode kernel
-        hashed = MM.image_ahash(bdf, grid=grid).join(
+        return MM.image_ahash(bdf, grid=grid).join(
             bdf.select("image_id", qbp.alias("__qbp")), "image_id"
-        ).persist()
+        )
+
+    def best_partials(hashed: DataFrame) -> DataFrame:
         ok = hashed.filter(F.col("ahash_bits").isNotNull())
         grp = ok.groupBy(F.col("ahash_bits").alias("bits")).agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -1798,7 +1727,7 @@ def run_streaming_image_keep_best(
             .groupBy(F.col("ahash_bits").alias("bits"))
             .agg(F.min("image_id").alias("__gid"))
         )
-        (
+        return (
             grp.join(gbest, "bits")
             .select(
                 "bits",
@@ -1808,43 +1737,33 @@ def run_streaming_image_keep_best(
                     (-F.col("__gid")).alias("neg"),
                 ).alias("best"),
             )
-            .withColumn("_batch_id", F.lit(batch_id))
             .coalesce(1)  # partials are distinct-hash tiny
-            .write.mode("append")
-            .parquet(out_dir)
         )
-        nulls = hashed.filter(F.col("ahash_bits").isNull()).select("image_id")
-        if nulls.limit(1).count():
-            nulls.coalesce(1).write.mode("append").parquet(null_dir)
+
+    partials = _StagedLog(
+        checkpoint_dir + "_partials",
+        STAGED_SINK_COMPACTION["image_kb_partials"],
+        best_partials,
+    )
+    null_ids = _StagedLog(
+        checkpoint_dir + "_nullids",
+        STAGED_SINK_COMPACTION["image_kb_nullids"],
+        lambda hashed: hashed.filter(F.col("ahash_bits").isNull())
+        .select("image_id")
+        .coalesce(1),
+    )
+
+    def _sink(bdf: DataFrame, batch_id: int) -> None:
+        # pin the decoded batch: both partials read it, and its upstream
+        # is the per-image decode kernel
+        hashed = decode(bdf).persist()
+        partials.append(hashed, batch_id)
+        if null_ids.partial(hashed).limit(1).count():
+            null_ids.append(hashed, batch_id)
         hashed.unpersist()
 
     replay(spark, _parquet_batches(images_path, max_files_per_trigger, _sink), checkpoint_dir)
 
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    partial_schema = StructType(
-        [
-            StructField("bits", StringType()),
-            StructField("n", LongType()),
-            StructField(
-                "best",
-                StructType(
-                    [StructField("gq", LongType()), StructField("neg", LongType())]
-                ),
-            ),
-            StructField("_batch_id", LongType()),
-        ]
-    )
-    staged = (
-        spark.read.parquet(out_dir)
-        if os.path.exists(out_dir)
-        else spark.createDataFrame([], partial_schema)
-    )
     from stateful_spark_streaming_spark.caching import track_persist
 
     # persisted for the same reason the batch operator pins its gsum
@@ -1853,35 +1772,25 @@ def run_streaming_image_keep_best(
     # winner selection) — unpinned, each consumer re-runs the staged-log
     # scan + replay-dedupe + fold.  Distinct-hash-sized.
     gsum = track_persist(
-        staged.dropDuplicates(["bits", "_batch_id"])
-        .groupBy(F.col("bits").alias("__bits"))
-        .agg(
-            F.sum("n").cast("long").alias("__n"),
-            F.max("best").alias("__b"),
-        )
-        .select(
-            "__bits",
-            "__n",
-            F.col("__b.gq").alias("__gq"),
-            (-F.col("__b.neg")).alias("__gid"),
+        partials.read(spark, images_path, decode).select(
+            F.col("bits").alias("__bits"),
+            F.col("n").alias("__n"),
+            F.col("best.gq").alias("__gq"),
+            (-F.col("best.neg")).alias("__gid"),
         )
     )
     winners = keep_best_from_hash_summaries(
         gsum, id_col="image_id", max_ham=max_ham, n_bands=n_bands, nbits=nbits,
         max_cluster_frac=max_cluster_frac,
     )
-    if os.path.exists(null_dir):
-        nulls = (
-            spark.read.parquet(null_dir)
-            .distinct()  # replay dedupe: identity rows
-            .select(
-                "image_id",
-                F.lit(1).cast("long").alias("cluster_size"),
-                F.lit("unique").alias("reason"),
-            )
+    # undecodable images surface individually
+    return winners.unionByName(
+        null_ids.read(spark, images_path, decode).select(
+            "image_id",
+            F.lit(1).cast("long").alias("cluster_size"),
+            F.lit("unique").alias("reason"),
         )
-        winners = winners.unionByName(nulls)
-    return winners
+    )
 
 
 def run_streaming_quality_histogram(
@@ -1907,7 +1816,6 @@ def run_streaming_quality_histogram(
     is ≤ ``groups × n_bins`` rows per batch regardless of document
     volume, and the log folds at any cadence via ``compact_partial_log``
     (spec ``STAGED_SINK_COMPACTION['quality_hist']``)."""
-    from pyspark.sql import functions as F
 
     from stateful_spark_streaming_spark.operators.stats import (
         histogram_finalize,
@@ -1916,7 +1824,23 @@ def run_streaming_quality_histogram(
     from stateful_spark_streaming_spark.operators.text import quality_score
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_qhist_")
-    out_dir = checkpoint_dir + "_hist"
+
+    def bin_counts(bdf: DataFrame) -> DataFrame:
+        return (
+            quality_score(bdf, keep_cols=(group_col,))
+            .select(
+                group_col,
+                scaled_bin(F.col("quality_score"), n_bins, scale).alias("bin"),
+            )
+            .groupBy(group_col, "bin")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+
+    hist = _StagedLog(
+        checkpoint_dir + "_hist",
+        quality_hist_compaction_spec(group_col),
+        lambda counts: counts.filter(F.col("bin").isNotNull()).coalesce(1),
+    )
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         # NULL bins drop AFTER the aggregate, from a persisted counts
@@ -1926,42 +1850,16 @@ def run_streaming_quality_histogram(
         # micro-batch.  The persist is summary-sized (≤ groups ×
         # (n_bins+1) rows) and released right after the write, so a
         # long-running stream never accumulates cache.
-        counts = (
-            quality_score(bdf, keep_cols=(group_col,))
-            .select(
-                group_col,
-                scaled_bin(F.col("quality_score"), n_bins, scale).alias("bin"),
-            )
-            .groupBy(group_col, "bin")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .persist()
-        )
+        counts = bin_counts(bdf).persist()
         try:
-            (
-                counts.filter(F.col("bin").isNotNull())
-                .withColumn("_batch_id", F.lit(batch_id))
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(out_dir)
-            )
+            hist.append(counts, batch_id)
         finally:
             counts.unpersist()
 
     replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
-
-    if not os.path.exists(out_dir):
-        staged = spark.createDataFrame(
-            [], f"{group_col} string, bin int, n bigint, _batch_id long"
-        )
-    else:
-        staged = spark.read.parquet(out_dir)
-    merged = (
-        staged.groupBy(group_col, "bin", "_batch_id")
-        .agg(F.max("n").alias("n"))  # replay dedupe: partials are deterministic
-        .groupBy(group_col, "bin")
-        .agg(F.sum("n").alias("n"))
+    return histogram_finalize(
+        hist.read(spark, documents_path, bin_counts), n_bins, scale
     )
-    return histogram_finalize(merged, n_bins, scale)
 
 
 def run_streaming_source_drift(
@@ -1983,7 +1881,6 @@ def run_streaming_source_drift(
     ``source_drift_from_counts`` tail — streaming ≡ batch exact, every
     basis point.  The log folds at any cadence via ``compact_partial_log``
     (spec ``STAGED_SINK_COMPACTION['source_token_counts']``)."""
-    from pyspark.sql import functions as F
 
     from stateful_spark_streaming_spark.operators.stats import (
         source_drift_from_counts,
@@ -1991,29 +1888,19 @@ def run_streaming_source_drift(
     )
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_drift_")
-    out_dir = checkpoint_dir + "_counts"
-
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
-        part = unigram_source_counts(bdf, group_col=group_col)
-        part.withColumn("_batch_id", F.lit(batch_id)).coalesce(1).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
-
-    if not os.path.exists(out_dir):
-        staged = spark.createDataFrame(
-            [], f"{group_col} string, token string, c bigint, _batch_id long"
-        )
-    else:
-        staged = spark.read.parquet(out_dir)
-    merged = (
-        staged.groupBy(group_col, "token", "_batch_id")
-        .agg(F.max("c").alias("c"))  # replay dedupe: partials are deterministic
-        .groupBy(group_col, "token")
-        .agg(F.sum("c").alias("c"))
+    counts = _StagedLog(
+        checkpoint_dir + "_counts",
+        _source_counts_spec(group_col),
+        lambda bdf: unigram_source_counts(bdf, group_col=group_col).coalesce(1),
     )
-    return source_drift_from_counts(merged, group_col, scale)
+    replay(
+        spark,
+        _parquet_batches(documents_path, max_files_per_trigger, counts.append),
+        checkpoint_dir,
+    )
+    return source_drift_from_counts(
+        counts.read(spark, documents_path), group_col, scale
+    )
 
 
 def run_streaming_heavy_hitters(
@@ -2039,7 +1926,6 @@ def run_streaming_heavy_hitters(
     runs the SAME ``cms_topk`` tail as the batch operator — streaming ≡
     batch exactly.  Compaction specs
     ``STAGED_SINK_COMPACTION['cms_counters'/'cms_candidates']``."""
-    from pyspark.sql import functions as F
 
     from stateful_spark_streaming_spark.operators.stats import (
         cms_counters,
@@ -2048,34 +1934,35 @@ def run_streaming_heavy_hitters(
     from stateful_spark_streaming_spark.operators.text import _token_occurrences
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_cms_")
-    ctr_dir = checkpoint_dir + "_counters"
-    cand_dir = checkpoint_dir + "_cands"
+    counters = _StagedLog(
+        checkpoint_dir + "_counters",
+        STAGED_SINK_COMPACTION["cms_counters"],
+        lambda bdf: cms_counters(
+            _token_occurrences(bdf, text_col, id_col), "token", depth, width
+        ).coalesce(1),
+    )
+    cands = _StagedLog(
+        checkpoint_dir + "_cands",
+        STAGED_SINK_COMPACTION["cms_candidates"],
+        lambda bdf: _token_occurrences(bdf, text_col, id_col)
+        .select("token")
+        .distinct()
+        .coalesce(1),
+    )
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
-        occ = _token_occurrences(bdf, text_col, id_col)
-        ctr = cms_counters(occ, "token", depth, width)
-        ctr.withColumn("_batch_id", F.lit(batch_id)).coalesce(1).write.mode(
-            "append"
-        ).parquet(ctr_dir)
-        occ.select("token").distinct().withColumn(
-            "_batch_id", F.lit(batch_id)
-        ).coalesce(1).write.mode("append").parquet(cand_dir)
+        counters.append(bdf, batch_id)
+        cands.append(bdf, batch_id)
 
     replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
-
-    if not os.path.exists(ctr_dir):
-        counters = spark.createDataFrame([], "r int, b int, n bigint")
-        cands = spark.createDataFrame([], "token string")
-    else:
-        counters = (
-            spark.read.parquet(ctr_dir)
-            .groupBy("r", "b", "_batch_id")
-            .agg(F.max("n").alias("n"))  # replay dedupe: partials deterministic
-            .groupBy("r", "b")
-            .agg(F.sum("n").alias("n"))
-        )
-        cands = spark.read.parquet(cand_dir).select("token").distinct()
-    return cms_topk(counters, cands, k, "token", depth, width)
+    return cms_topk(
+        counters.read(spark, documents_path),
+        cands.read(spark, documents_path),
+        k,
+        "token",
+        depth,
+        width,
+    )
 
 
 def _change_feed_union_columns(spark: SparkSession, changes_path: str) -> set:
@@ -2221,7 +2108,6 @@ def run_streaming_merge_upsert(
     layout module's key clustering exists to make cheap.
     ``shuffle_partitions`` sizes the per-batch shuffles to change-batch
     volume (see ``run_streaming_incremental_agg``)."""
-    from pyspark.sql import functions as F
 
     from stateful_spark_streaming_spark.generations import (
         list_staged_partitions,
@@ -2555,8 +2441,6 @@ def run_streaming_incremental_agg(
         with_merge_meta,
     )
 
-    from pyspark.sql import functions as F
-
     groups = list(group_cols)
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_incagg_")
     table_dir = checkpoint_dir + "_table"
@@ -2877,7 +2761,6 @@ def run_streaming_partitioned_ingest(
     (``dropDuplicates('event_id')``) — a crash between a batch's append
     and its checkpoint commit re-appends byte-identical rows, which the
     key dedupe collapses.  Returns ``out_dir``."""
-    from pyspark.sql import functions as F
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_ping_")
     out_dir = out_dir or checkpoint_dir + "_data"
@@ -2930,7 +2813,6 @@ def run_streaming_corpus_report(
     Replay idempotency: both appends are batch-stamped; replays re-append
     byte-identical rows (per-doc quality is deterministic and rounded
     before summing), collapsed by the per-(key, batch) dedupe on read."""
-    from pyspark.sql import functions as F
 
     from stateful_spark_streaming_spark.operators.text import (
         normalize_text,
@@ -2938,111 +2820,62 @@ def run_streaming_corpus_report(
     )
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_creport_")
-    stats_dir = checkpoint_dir + "_stats"
-    fps_dir = checkpoint_dir + "_fps"
 
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
-        # normalize the id ONCE so both sinks honor a non-default id_col
-        # (quality_score's projection is doc_id-fixed; ADVICE r5); drop
-        # any unrelated pre-existing doc_id payload column first — the
-        # rename would otherwise create an ambiguous duplicate name
-        b = bdf
-        if id_col != "doc_id":
-            if "doc_id" in b.columns:
-                b = b.drop("doc_id")
-            b = b.withColumnRenamed(id_col, "doc_id")
-        scored = quality_score(
-            b, text_col=text_col, keep_cols=("source", "lang")
-        ).select("doc_id", "source", "lang", "n_tokens", "quality_score")
-        (
-            scored.groupBy("source")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_tokens").alias("total_tokens"),
-                F.sum("quality_score").alias("sum_q"),
-                F.sum((F.col("lang") == "en").cast("int")).alias("n_en"),
-            )
-            .withColumn("_batch_id", F.lit(batch_id))
-            .coalesce(1)  # partials are source-cardinality tiny
-            .write.mode("append")
-            .parquet(stats_dir)
-        )
-        (
-            b.select(
-                F.col("doc_id"),
-                F.col("source"),
-                F.md5(normalize_text(F.col(text_col))).alias("fp"),
-            )
-            .groupBy("fp", "source")
-            .agg(F.count("*").alias("n"), F.min("doc_id").alias("min_doc"))
-            .withColumn("_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(fps_dir)
-        )
+    def with_doc_id(bdf: DataFrame) -> DataFrame:
+        # normalize the id ONCE so both partials honor a non-default
+        # id_col (quality_score's projection is doc_id-fixed; ADVICE r5);
+        # drop any unrelated pre-existing doc_id payload column first —
+        # the rename would otherwise create an ambiguous duplicate name
+        if id_col == "doc_id":
+            return bdf
+        if "doc_id" in bdf.columns:
+            bdf = bdf.drop("doc_id")
+        return bdf.withColumnRenamed(id_col, "doc_id")
 
-    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
-
-    if not os.path.exists(stats_dir):
-        # zero micro-batches: empty card through the SAME merge code over
-        # typed empty staged frames (schema incl. nullability can never
-        # drift from the normal path), not a PATH_NOT_FOUND crash
-        raw_stats = spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, total_tokens bigint, "
-            "sum_q double, n_en bigint, _batch_id long",
-        )
-        from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-        raw_fps = spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("fp", StringType()),
-                    StructField("source", StringType()),
-                    StructField("n", LongType()),
-                    # id-typed from the input: string doc ids are legitimate
-                    StructField("min_doc", spark.read.parquet(documents_path).schema[id_col].dataType),
-                    StructField("_batch_id", LongType()),
-                ]
-            ),
-        )
-    else:
-        raw_stats = spark.read.parquet(stats_dir)
-        raw_fps = spark.read.parquet(fps_dir)
-
-    stats = (
-        raw_stats
-        # replay dedupe: one partial row per (source, batch)
-        .groupBy("source", "_batch_id")
-        .agg(
-            F.max("n_docs").alias("n_docs"),
-            F.max("total_tokens").alias("total_tokens"),
-            F.max("sum_q").alias("sum_q"),
-            F.max("n_en").alias("n_en"),
+    stats_log = _StagedLog(
+        checkpoint_dir + "_stats",
+        STAGED_SINK_COMPACTION["corpus_stats"],
+        lambda bdf: quality_score(
+            with_doc_id(bdf), text_col=text_col, keep_cols=("source", "lang")
         )
         .groupBy("source")
         .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("total_tokens").alias("total_tokens"),
-            F.sum("sum_q").alias("sum_q"),
-            F.sum("n_en").alias("n_en"),
+            F.count("*").alias("n_docs"),
+            F.sum("n_tokens").alias("total_tokens"),
+            F.sum("quality_score").alias("sum_q"),
+            F.sum((F.col("lang") == "en").cast("int")).alias("n_en"),
         )
+        .coalesce(1),  # partials are source-cardinality tiny
     )
-    fps = (
-        raw_fps
-        .dropDuplicates(["fp", "source", "_batch_id"])
+    fps_log = _StagedLog(
+        checkpoint_dir + "_fps",
+        STAGED_SINK_COMPACTION["corpus_fps"],
+        lambda bdf: with_doc_id(bdf)
+        .select(
+            F.col("doc_id"),
+            F.col("source"),
+            F.md5(normalize_text(F.col(text_col))).alias("fp"),
+        )
         .groupBy("fp", "source")
-        .agg(F.sum("n").alias("n"), F.min("min_doc").alias("min_doc_src"))
+        .agg(F.count("*").alias("n"), F.min("doc_id").alias("min_doc"))
+        .coalesce(1),
     )
-    gmin = fps.groupBy("fp").agg(F.min("min_doc_src").alias("gmin"))
+
+    def _sink(bdf: DataFrame, batch_id: int) -> None:
+        stats_log.append(bdf, batch_id)
+        fps_log.append(bdf, batch_id)
+
+    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
+    stats = stats_log.read(spark, documents_path)
+    fps = fps_log.read(spark, documents_path)
+    gmin = fps.groupBy("fp").agg(F.min("min_doc").alias("gmin"))
     ndup = (
         fps.join(gmin, "fp")
         .select(
             "source",
             (
                 F.col("n")
-                - (F.col("min_doc_src") == F.col("gmin")).cast("long")
+                - (F.col("min_doc") == F.col("gmin")).cast("long")
             ).alias("d"),
         )
         .groupBy("source")
@@ -3094,7 +2927,6 @@ def run_streaming_dup_spans(
     batches re-append byte-identical rows (the kernel is deterministic and
     a doc belongs to exactly one batch), so distinct-on-read restores
     exactly-once."""
-    from pyspark.sql import functions as F
 
     from stateful_spark_streaming_spark.operators.dedup import (
         _gram_positions,
@@ -3102,55 +2934,24 @@ def run_streaming_dup_spans(
     )
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_spans_")
-    out_dir = checkpoint_dir + "_index"
-
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
-        (
-            _gram_positions(bdf, text_col, id_col, k)
-            .select("doc", "pos", F.xxhash64("gram").alias("gh"))
-            .withColumn("_batch_id", F.lit(batch_id))
-            # REPARTITION, not coalesce, to avoid spraying near-empty
-            # files: coalesce would collapse the expensive gram kernel
-            # above it into 4 tasks (no exchange between them), undoing
-            # the _spread that keeps per-batch tokenization wide; the
-            # exchange here moves only compact (id, int, long) rows
-            .repartition(4)
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
-    replay(spark, _parquet_batches(documents_path, max_files_per_trigger, _sink), checkpoint_dir)
-
-    if not os.path.exists(out_dir):
-        # zero micro-batches: empty span set, not a PATH_NOT_FOUND crash.
-        # Schema DERIVED through the shared tail over a typed empty index
-        # (not hand-written) so it can never drift from the normal path.
-        from pyspark.sql.types import (
-            IntegerType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        empty_index = spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("doc", spark.read.parquet(documents_path).schema[id_col].dataType),
-                    StructField("pos", IntegerType()),
-                    StructField("gh", LongType()),
-                ]
-            ),
-        )
-        return dup_spans_from_index(empty_index, "gh", k, min_docs)
-    g = (
-        spark.read.parquet(out_dir)
-        # replay dedupe: a (doc, pos) gram occurrence exists once in the
-        # true stream; duplicates can only be replayed appends
-        .dropDuplicates(["doc", "pos", "gh"])
-        .drop("_batch_id")
+    index = _StagedLog(
+        checkpoint_dir + "_index",
+        STAGED_SINK_COMPACTION["span_index"],
+        lambda bdf: _gram_positions(bdf, text_col, id_col, k)
+        .select("doc", "pos", F.xxhash64("gram").alias("gh"))
+        # REPARTITION, not coalesce, to avoid spraying near-empty
+        # files: coalesce would collapse the expensive gram kernel
+        # above it into 4 tasks (no exchange between them), undoing
+        # the _spread that keeps per-batch tokenization wide; the
+        # exchange here moves only compact (id, int, long) rows
+        .repartition(4),
     )
-    return dup_spans_from_index(g, "gh", k, min_docs)
+    replay(
+        spark,
+        _parquet_batches(documents_path, max_files_per_trigger, index.append),
+        checkpoint_dir,
+    )
+    return dup_spans_from_index(index.read(spark, documents_path), "gh", k, min_docs)
 
 
 def run_streaming_ivf_topk(
@@ -3179,7 +2980,6 @@ def run_streaming_ivf_topk(
     streams without a watermark) is expressed in the serving shape.  At
     scale the index side is the big one (cell-partitioned parquet, probe
     prunes partitions at the scan) and the per-batch query side is small."""
-    from pyspark.sql import functions as F
 
     from stateful_spark_streaming_spark.operators.similarity import (
         ivf_load_index,
@@ -3187,29 +2987,22 @@ def run_streaming_ivf_topk(
     )
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_ivfq_")
-    out_dir = checkpoint_dir + "_out"
     index = ivf_load_index(spark, index_path)
 
     # embeddings frame for the corpus side of ivf_topk: the index itself
     emb = index[0].drop("cell")
+    # a (query_id, rank) hit exists once; duplicates can only be replays
+    hits = _StagedLog(
+        checkpoint_dir + "_out",
+        dict(keys=["query_id", "rank", "neighbor_id", "cosine"], batch_col=None),
+        lambda bdf: ivf_topk(
+            emb, bdf, k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col, index=index
+        ).coalesce(2),
+    )
 
     def _probe(bdf: DataFrame, batch_id: int) -> None:
-        if not bdf.take(1):
-            return
-        (
-            ivf_topk(
-                emb,
-                bdf,
-                k=k,
-                nprobe=nprobe,
-                id_col=id_col,
-                vec_col=vec_col,
-                index=index,
-            )
-            .coalesce(2)
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        if bdf.take(1):
+            hits.append(bdf, batch_id)
 
     def build(s: SparkSession):
         stream = _stage_parquet_stream(s, queries_path, max_files_per_trigger)
@@ -3218,16 +3011,7 @@ def run_streaming_ivf_topk(
         return stream.writeStream.foreachBatch(_probe)
 
     replay(spark, build, checkpoint_dir)
-    if not os.path.exists(out_dir):
-        # every micro-batch was empty (e.g. a query_filter matching no
-        # rows): nothing was ever appended — return the empty frame the
-        # batch ANN twins return, not a PATH_NOT_FOUND crash
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, cosine double"
-        )
-    # distinct-on-read = replay idempotency (see run_streaming_dedup_minhash);
-    # a (query_id, rank) pair exists once, duplicates can only be replays
-    return spark.read.parquet(out_dir).distinct()
+    return hits.read(spark, queries_path)
 
 
 def run_streaming_ivf_ingest(
@@ -3341,7 +3125,6 @@ def run_streaming_event_pairs(
     path measures ~2× faster than RocksDB's.  Pass ``'rocksdb'`` (or None
     to inherit the session) when the tolerance×rate product makes buffered
     state bigger than executor memory."""
-    from pyspark.sql import functions as F
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_ssj_")
     out_dir = checkpoint_dir + "_out"
@@ -3462,7 +3245,6 @@ def run_streaming_enriched_counts(
     of the stream, no state for the join itself; only the downstream
     aggregate keeps (groups) state.  The canonical 100 TB form for
     firehose × slowly-changing-dim enrichment."""
-    from pyspark.sql import functions as F
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_enrich_")
     sink = ParquetSnapshotSink(

@@ -9,6 +9,7 @@ import glob
 import hashlib
 import math
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -138,7 +139,9 @@ def test_ngram_overlap_eval_kernel_evaluates_once(spark):
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
     )
-    assert plan.count("InMemoryTableScan") >= 2, plan
+    # the formatted plan names each node twice (tree line + detail
+    # header): count the "(n) InMemoryTableScan" detail headers
+    assert len(re.findall(r"\(\d+\) InMemoryTableScan", plan)) >= 2, plan
     spark.catalog.clearCache()
 
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 import duckdb
 import pytest
@@ -282,8 +283,6 @@ def test_bloom_probe_not_copied_across_verify_join(spark):
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
     )
-    import re
-
     # the formatted dump names each node twice (tree line + details
     # header) — count the details headers only
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
@@ -545,8 +544,10 @@ def test_quantile_operators_evaluate_scored_subtree_once(spark):
         plan = out._sc._jvm.PythonSQLUtils.explainString(
             out._jdf.queryExecution(), "formatted"
         )
-        # threshold branch + row branch both read the cache
-        assert plan.count("InMemoryTableScan") >= 2, plan
+        # threshold branch + row branch both read the cache: count the
+        # "(n) InMemoryTableScan" detail headers — the formatted plan
+        # names each node twice, so raw matches pass on one cached scan
+        assert len(re.findall(r"\(\d+\) InMemoryTableScan", plan)) >= 2, plan
     spark.catalog.clearCache()
 
 

@@ -525,54 +525,139 @@ def test_streaming_dedup_minhash_string_ids(spark, tmp_path):
     assert sorted(r.doc_id for r in out.collect()) == ["doc-a", "doc-c"]
 
 
-def test_streaming_entries_zero_batch_restart_return_typed_empty(spark, tmp_path):
-    """Restart with a caught-up checkpoint and a cleaned output dir:
-    availableNow fires ZERO micro-batches, nothing is ever appended, and
-    each entry must return a typed empty frame — not crash with
-    PATH_NOT_FOUND on the missing output dir (the r4 guard existed only in
-    run_streaming_ivf_topk; ADVICE r4 asked for the other three)."""
+def test_streaming_entries_zero_batch_restart_return_typed_empty(
+    spark, sf_dir, tmp_path
+):
+    """The staged-runner registry: every ``foreachBatch`` ingest runner
+    that appends batch-stamped partial logs and folds them on read, both
+    LM orders, held to the same three restart contracts on one checkpoint:
+    (a) the first run is non-empty; (b) a crash-replayed append — every
+    staged ``part-*`` file copied to ``replay-part-*`` — leaves a re-run's
+    rows identical; (c) with the staged dirs removed, a re-run fires ZERO
+    micro-batches (the checkpoint is caught up) and must return 0 rows
+    with the first run's schema, not crash with PATH_NOT_FOUND."""
+    import glob
     import shutil
 
-    from stateful_spark_streaming_spark.streaming.pipeline import (
-        run_streaming_corpus_report,
-        run_streaming_decontaminate,
-        run_streaming_dup_spans,
-        run_streaming_vocab,
-    )
+    from stateful_spark_streaming_spark.operators import multimodal as MM
+    from stateful_spark_streaming_spark.operators import similarity as SIM
+    from stateful_spark_streaming_spark.sources.tables import load_table
+    from stateful_spark_streaming_spark.streaming import pipeline as P
 
-    rows = [(1, "alpha beta gamma delta epsilon"), (2, "alpha beta gamma delta epsilon")]
-    src = str(tmp_path / "docs_zb")
-    spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(1).write.parquet(src)
-    eval_df = spark.createDataFrame([(100, "alpha beta gamma delta epsilon")],
-                                    ["doc_id", "text"])
-    src_card = str(tmp_path / "docs_zb_card")
+    text = "alpha beta gamma delta epsilon"
+    docs = str(tmp_path / "docs_zb")
     spark.createDataFrame(
-        [(1, "web", "en", "alpha beta gamma")],
-        "doc_id long, source string, lang string, text string",
-    ).coalesce(1).write.parquet(src_card)
+        [
+            (1, text, "web", "en"),
+            (2, text, "books", "en"),
+            (3, "zeta eta theta iota kappa lambda", "web", "es"),
+        ],
+        "doc_id long, text string, source string, lang string",
+    ).coalesce(1).write.parquet(docs)
+    eval_df = spark.createDataFrame([(100, text)], ["doc_id", "text"])
+    events = str(tmp_path / "events_zb")
+    spark.createDataFrame(
+        [(i, f"t{i % 3}", i % 7) for i in range(60)],
+        "event_id long, event_type string, user_id long",
+    ).coalesce(1).write.parquet(events)
+    images = str(tmp_path / "images_zb")
+    MM.synthesize_image_table(
+        spark,
+        spark.createDataFrame(
+            [(1, 40), (257, 40), (7, 43)], "doc_id long, n_chars long"
+        ),
+    ).coalesce(1).write.parquet(images)
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = str(tmp_path / "ivf_idx_zb")
+    SIM.ivf_build_or_load(emb, idx, n_centroids=4)
+    queries = str(tmp_path / "queries_zb")
+    emb.filter(F.col("vec_id") < 4).coalesce(1).write.parquet(queries)
 
-    for name, suffix, run in (
-        ("vocab", "_partials",
-         lambda ck: run_streaming_vocab(spark, src, top_n=10, checkpoint_dir=ck)),
-        ("decon", "_out",
-         lambda ck: run_streaming_decontaminate(spark, src, eval_df, k=3,
-                                                checkpoint_dir=ck)),
-        ("minhash", "_out",
-         lambda ck: run_streaming_dedup_minhash(spark, src, checkpoint_dir=ck)),
-        ("spans", "_index",
-         lambda ck: run_streaming_dup_spans(spark, src, checkpoint_dir=ck)),
-        ("card", "_stats",
-         lambda ck: run_streaming_corpus_report(spark, src_card,
-                                                checkpoint_dir=ck)),
-    ):
+    runners = {
+        "vocab": lambda ck: P.run_streaming_vocab(
+            spark, docs, top_n=10, checkpoint_dir=ck
+        ),
+        "lm1": lambda ck: P.run_streaming_lm_logprob(
+            spark, docs, order=1, checkpoint_dir=ck
+        ),
+        "lm2": lambda ck: P.run_streaming_lm_logprob(
+            spark, docs, order=2, checkpoint_dir=ck
+        ),
+        "hll": lambda ck: P.run_streaming_distinct_stats(
+            spark, events, checkpoint_dir=ck
+        ),
+        "kmv": lambda ck: P.run_streaming_distinct_kmv(
+            spark, events, k=4, checkpoint_dir=ck
+        ),
+        "img": lambda ck: P.run_streaming_image_keep_best(
+            spark, images, checkpoint_dir=ck, max_cluster_frac=None
+        ),
+        "qhist": lambda ck: P.run_streaming_quality_histogram(
+            spark, docs, checkpoint_dir=ck
+        ),
+        "drift": lambda ck: P.run_streaming_source_drift(
+            spark, docs, checkpoint_dir=ck
+        ),
+        "cms": lambda ck: P.run_streaming_heavy_hitters(
+            spark, docs, k=5, checkpoint_dir=ck
+        ),
+        "card": lambda ck: P.run_streaming_corpus_report(
+            spark, docs, checkpoint_dir=ck
+        ),
+        "spans": lambda ck: P.run_streaming_dup_spans(
+            spark, docs, checkpoint_dir=ck
+        ),
+        "minhash": lambda ck: P.run_streaming_dedup_minhash(
+            spark, docs, checkpoint_dir=ck
+        ),
+        "decon": lambda ck: P.run_streaming_decontaminate(
+            spark, docs, eval_df, k=3, checkpoint_dir=ck
+        ),
+        "ivf": lambda ck: P.run_streaming_ivf_topk(
+            spark, queries, idx, k=3, checkpoint_dir=ck
+        ),
+    }
+    for name, run in runners.items():
         ck = str(tmp_path / f"ckpt_zb_{name}")
         first = run(ck)
-        first_schema = first.schema
-        assert first.count() > 0
-        shutil.rmtree(ck + suffix)
-        second = run(ck)  # same checkpoint: no new files -> zero batches
-        assert second.count() == 0
-        assert second.schema == first_schema, name
+        rows = sorted(map(tuple, first.collect()))
+        assert rows, f"{name}: empty first run proves nothing"
+        staged = glob.glob(ck + "_*")
+        assert staged, name
+        for d in staged:
+            for f in glob.glob(os.path.join(d, "part-*")):
+                shutil.copy(f, f.replace("part-", "replay-part-"))
+        assert sorted(map(tuple, run(ck).collect())) == rows, name
+        for d in staged:
+            shutil.rmtree(d)
+        empty = run(ck)  # same checkpoint: no new files -> zero batches
+        assert empty.count() == 0, name
+        assert empty.schema == first.schema, name
+
+
+def test_streaming_single_file_source_restarts(spark, sf_dir, tmp_path):
+    """A single-file source streams through a staging dir; the dir must
+    be the same on every run, or a restart on the checkpoint fails with
+    ``Wrong basePath`` — the checkpoint's source log names the files it
+    has seen under the first run's dir.  Pinned on a staged-log runner
+    and on the ``stream_events_source`` path."""
+    from stateful_spark_streaming_spark.streaming.pipeline import (
+        run_streaming_dedup,
+        run_streaming_distinct_stats,
+    )
+
+    events = os.path.join(sf_dir, "events.parquet")
+    assert os.path.isfile(events)
+    for name, run in (
+        ("hll", lambda ck: run_streaming_distinct_stats(
+            spark, events, checkpoint_dir=ck)),
+        ("dedup", lambda ck: run_streaming_dedup(
+            spark, events, checkpoint_dir=ck)),
+    ):
+        ck = str(tmp_path / f"ckpt_1f_{name}")
+        first = sorted(map(tuple, run(ck).collect()))
+        assert first, name
+        assert sorted(map(tuple, run(ck).collect())) == first, name
 
 
 def test_streaming_dup_spans_multibatch_equals_batch(spark, tmp_path):

@@ -699,8 +699,8 @@ def test_remove_dup_spans_reassembly_never_explodes_corpus_tokens(spark):
     df = spark.createDataFrame(
         [
             Row(doc_id=1, text=f"{shared} unique closing words here"),
-            # back-to-back occurrences: doc 2's duplicated grams merge into
-            # ONE maximal span covering both copies (14 tokens)
+            # back-to-back occurrences: doc 2 carries two adjacent 7-token
+            # spans, one per copy, together covering 14 tokens
             Row(doc_id=2, text=f"lead in filler {shared} {shared} ending"),
             Row(doc_id=3, text=shared),
         ]
